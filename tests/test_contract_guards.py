@@ -2,13 +2,15 @@
 
 Cheap tests that catch whole classes of bookkeeping mistakes before a
 driver round does: a bench suite entry referring to a renamed registry
-query (the r10 dedup_incremental shadowing lesson), or an oracle SQL
+query (the r10 dedup_incremental shadowing lesson), an oracle SQL
 string that no longer parses after an edit (the full sweep would catch
-it too, but this runs in seconds inside pytest).
+it too, but this runs in seconds inside pytest), or a series packed for a
+pandas kernel by hand instead of through generators.to_wide.
 """
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -65,3 +67,33 @@ def test_all_oracles_parse_in_duckdb():
         except Exception as exc:  # noqa: BLE001 — collect all, report once
             bad.append(f"{name}: {type(exc).__name__}: {str(exc)[:120]}")
     assert not bad, "oracles failed to parse:\n" + "\n".join(bad)
+
+
+# array_sort(collect_list(F.struct(<order>, <value>))).alias("<name>")
+_SORTED_PACK = re.compile(
+    r"collect_list\(\s*F\.struct\(.*?\)\s*\)\s*\)\s*\.alias\(\s*\"(?P<name>\w+)\"",
+    re.S,
+)
+
+
+def inline_series_packs(pkg: Path) -> list[str]:
+    """Sorted-struct packs in `pkg` that project a single `.v`/`.x` field —
+    the wide-series idiom generators.to_wide owns. Packs that keep several
+    fields (e.g. decompose's `t` and `v`) are a different shape."""
+    found = []
+    for path in sorted(pkg.glob("*.py")):
+        if path.name == "generators.py":
+            continue
+        text = path.read_text()
+        for m in _SORTED_PACK.finditer(text):
+            after = text[m.end() : m.end() + 600]
+            fields = set(re.findall(rf'"{m.group("name")}\.(\w+)"', after))
+            if len(fields) == 1 and fields <= {"v", "x"}:
+                line = text.count("\n", 0, m.start()) + 1
+                found.append(f"{path.name}:{line}")
+    return found
+
+
+def test_series_packs_go_through_to_wide():
+    found = inline_series_packs(ROOT / "tsgen")
+    assert not found, f"pack series with generators.to_wide / series_kernel: {found}"

@@ -56,6 +56,30 @@ def test_wide_long_roundtrip(spark):
     a = df.toPandas().sort_values(["series_id", "t"]).reset_index(drop=True)
     b = back.toPandas().sort_values(["series_id", "t"]).reset_index(drop=True)
     assert np.allclose(a.value.to_numpy(), b.value.to_numpy())
+    # rows shuffled out of t order, series of unequal length: each packed
+    # array must still be t-sorted, and to_long must invert the pack
+    rng = np.random.default_rng(3)
+    rows = [(sid, t, float(sid * 100 + t)) for sid, n in ((1, 1), (2, 3), (3, 5)) for t in range(n)]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    df = spark.createDataFrame(rows, "series_id long, t long, value double").repartition(3)
+    wide = {r.series_id: list(r.vs) for r in generators.to_wide(df).collect()}
+    assert wide == {
+        1: [100.0],
+        2: [200.0, 201.0, 202.0],
+        3: [300.0, 301.0, 302.0, 303.0, 304.0],
+    }
+    back = generators.to_long(generators.to_wide(df)).toPandas()
+    assert sorted(back.itertuples(index=False, name=None)) == sorted(rows)
+
+
+def test_series_kernel_on_empty_input_returns_declared_schema(spark):
+    def kernel(pdf):
+        return pdf.assign(n=pdf["vs"].map(len))[["series_id", "n"]]
+
+    empty = spark.createDataFrame([], "series_id long, t long, value double")
+    out = generators.series_kernel(empty, kernel, "series_id bigint, n bigint")
+    assert out.schema.simpleString() == "struct<series_id:bigint,n:bigint>"
+    assert out.collect() == []
 
 
 def test_runner_dim3_decomposes_per_channel(spark):

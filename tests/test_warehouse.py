@@ -198,6 +198,33 @@ def test_holt_damped_matches_scalar_reference_and_flattens(spark):
     assert out.fc < und.fc
 
 
+def test_holt_skips_series_shorter_than_two_points(spark):
+    # b_0 = y_1 − y_0 needs two points: the DuckDB twins seed from y0 ⋈ y1
+    # and emit no row for a length-1 series, whether it shares an Arrow
+    # batch with longer series or is all the batch holds
+    import duckdb
+
+    from tsgen.forecast import holt_damped_forecast, holt_damped_sql, holt_forecast, holt_sql
+
+    rng = np.random.default_rng(5)
+    rows = [
+        (sid, t, float(rng.normal()))
+        for sid, n in ((1, 1), (2, 6), (3, 1), (4, 9))
+        for t in range(n)
+    ]
+    schema = "series_id long, t long, value double"
+    mixed = spark.createDataFrame(rows, schema)
+    short = spark.createDataFrame([(7, 0, 1.5), (8, 0, -2.0)], schema)
+    pts = pd.DataFrame(rows, columns=["series_id", "t", "value"])  # noqa: F841 (DuckDB scan)
+    for kernel, twin in ((holt_forecast, holt_sql), (holt_damped_forecast, holt_damped_sql)):
+        got = sorted(kernel(mixed).collect())
+        want = duckdb.sql(twin("SELECT * FROM pts")).df().sort_values("series_id")
+        assert [r.series_id for r in got] == want.series_id.tolist() == [2, 4]
+        for col in ("level", "trend", "fc"):
+            assert np.allclose([r[col] for r in got], want[col], atol=1e-6), col
+        assert kernel(short).collect() == []
+
+
 def test_attribution_last_touch(spark):
     rows = [
         (1, 1, "view", 100), (2, 1, "click", 200), (3, 1, "purchase", 300),

@@ -4,19 +4,29 @@ baseline forecasters).
 
 - seasonal_naive: ŷ(T+h) = y(T+h−m) — pure window/join SQL, oracle-checked.
 - ses: simple exponential smoothing level forecast — recursive, so it runs
-  batch-vectorized in mapInPandas (pandas-twin tested).
+  batch-vectorized under generators.series_kernel (pandas-twin tested).
 - anomalies: decomposition-residual z-score flags — composition of
   decompose() and per-series stats.
 """
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .decompose import decompose
+from .generators import series_kernel
+
+
+def _pad(vs) -> tuple[np.ndarray, np.ndarray]:
+    """Stack a batch of series into an (n_series, T) matrix, NaN-padded past
+    each series' end; also return the lengths n (T = n.max())."""
+    arrs = [np.asarray(v, dtype=float) for v in vs]
+    n = np.array([len(a) for a in arrs])
+    Y = np.full((len(arrs), int(n.max())), np.nan)
+    for i, a in enumerate(arrs):
+        Y[i, : len(a)] = a
+    return Y, n
 
 
 def seasonal_naive(
@@ -57,31 +67,22 @@ def ses_forecast(
 ) -> DataFrame:
     """Simple exponential smoothing: level_t = α·y_t + (1−α)·level_{t−1};
     the one-step-ahead forecast is the final level. Recursive → vectorized
-    per Arrow batch of series in mapInPandas."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    per Arrow batch of series by series_kernel."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_keys, levels = [], []
-            for k, vs in zip(pdf[key], pdf["vs"]):
-                arr = np.asarray(vs, dtype=float)
-                n = len(arr)
-                # Closed form of the recursion level_t = α·y_t + (1−α)·level_{t−1}:
-                #   level_{n−1} = (1−α)^(n−1)·y_0 + α·Σ_{t≥1} (1−α)^(n−1−t)·y_t
-                # — one vectorized dot product per series, no per-point loop.
-                w = alpha * np.power(1.0 - alpha, np.arange(n - 1, -1, -1, dtype=float))
-                w[0] = (1.0 - alpha) ** (n - 1)
-                out_keys.append(k)
-                levels.append(float(w @ arr))
-            yield pd.DataFrame({key: out_keys, "level": levels})
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        levels = []
+        for vs in pdf["vs"]:
+            arr = np.asarray(vs, dtype=float)
+            n = len(arr)
+            # Closed form of the recursion level_t = α·y_t + (1−α)·level_{t−1}:
+            #   level_{n−1} = (1−α)^(n−1)·y_0 + α·Σ_{t≥1} (1−α)^(n−1−t)·y_t
+            # — one vectorized dot product per series, no per-point loop.
+            w = alpha * np.power(1.0 - alpha, np.arange(n - 1, -1, -1, dtype=float))
+            w[0] = (1.0 - alpha) ** (n - 1)
+            levels.append(float(w @ arr))
+        return pd.DataFrame({key: pdf[key], "level": levels})
 
-    return wide.mapInPandas(fn, f"{key} bigint, level double")
+    return series_kernel(df, kernel, f"{key} bigint, level double", key, value)
 
 
 def anomalies(
@@ -116,48 +117,12 @@ def holt_forecast(
         b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
     init l_0 = y_0, b_0 = y_1 − y_0; h-step forecast = l_T + h·b_T.
 
-    The recursion is sequential in t but embarrassingly parallel across
-    series, so the mapInPandas kernel iterates TIME steps only (T numpy
-    ops), with every step vectorized across all series of the Arrow batch —
-    no per-point Python loop (the ses_forecast lesson). Series of unequal
-    length are NaN-padded and masked. Requires ≥ 2 points per series.
+    This is holt_damped_forecast at φ = 1: every φ product is then a
+    multiplication by 1.0, which is exact, so the output is bit-identical
+    to the undamped recursion (and to holt_sql). Series with fewer than 2
+    points have no b_0 and emit no row, as in the oracle.
     """
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
-    oma, omb = 1.0 - alpha, 1.0 - beta
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            level = Y[:, 0].copy()
-            trend = Y[:, 1] - Y[:, 0]
-            for t in range(1, T):
-                active = t < n
-                y = Y[:, t]
-                l_new = alpha * y + oma * (level + trend)
-                b_new = beta * (l_new - level) + omb * trend
-                level = np.where(active, l_new, level)
-                trend = np.where(active, b_new, trend)
-            yield pd.DataFrame(
-                {
-                    key: pdf[key],
-                    "level": level,
-                    "trend": trend,
-                    "fc": level + horizon * trend,
-                }
-            )
-
-    return wide.mapInPandas(fn, f"{key} bigint, level double, trend double, fc double")
+    return holt_damped_forecast(df, alpha, beta, 1.0, horizon, key, value)
 
 
 def holt_damped_forecast(
@@ -176,49 +141,42 @@ def holt_damped_forecast(
         l_t = α·y_t + (1−α)·(l_{t−1} + φ·b_{t−1})
         b_t = β·(l_t − l_{t−1}) + (1−β)·φ·b_{t−1}
         ŷ_{T+h} = l_T + (φ + φ² + … + φ^h)·b_T
-    Same execution shape as holt_forecast: T numpy steps, each vectorized
-    across every series of the Arrow batch."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    init l_0 = y_0, b_0 = y_1 − y_0, so series with fewer than 2 points emit
+    no row (the oracle's y0 ⋈ y1 seed drops them too).
+
+    Runs under series_kernel: the recursion is sequential in t but
+    independent across series, so the kernel iterates TIME steps only (T
+    numpy ops), each vectorized across every series of the Arrow batch.
+    Series of unequal length are NaN-padded and masked."""
     oma, ombphi = 1.0 - alpha, (1.0 - beta) * phi
     phi_sum = 0.0
     p = 1.0
     for _ in range(horizon):
         p = p * phi
         phi_sum = phi_sum + p
+    cols = [key, "level", "trend", "fc"]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            level = Y[:, 0].copy()
-            trend = Y[:, 1] - Y[:, 0]
-            for t in range(1, T):
-                active = t < n
-                y = Y[:, t]
-                l_new = alpha * y + oma * (level + phi * trend)
-                b_new = beta * (l_new - level) + ombphi * trend
-                level = np.where(active, l_new, level)
-                trend = np.where(active, b_new, trend)
-            yield pd.DataFrame(
-                {
-                    key: pdf[key],
-                    "level": level,
-                    "trend": trend,
-                    "fc": level + phi_sum * trend,
-                }
-            )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf[pdf["vs"].map(len) >= 2]
+        if pdf.empty:
+            return pd.DataFrame(columns=cols)
+        Y, n = _pad(pdf["vs"])
+        level = Y[:, 0].copy()
+        trend = Y[:, 1] - Y[:, 0]
+        for t in range(1, Y.shape[1]):
+            active = t < n
+            y = Y[:, t]
+            l_new = alpha * y + oma * (level + phi * trend)
+            b_new = beta * (l_new - level) + ombphi * trend
+            level = np.where(active, l_new, level)
+            trend = np.where(active, b_new, trend)
+        return pd.DataFrame(
+            {key: pdf[key], "level": level, "trend": trend, "fc": level + phi_sum * trend}
+        )
 
-    return wide.mapInPandas(fn, f"{key} bigint, level double, trend double, fc double")
+    return series_kernel(
+        df, kernel, f"{key} bigint, level double, trend double, fc double", key, value
+    )
 
 
 def holt_damped_sql(
@@ -301,55 +259,44 @@ def kalman_filter(
         l_t  = l_{t−1} + k_t·(y_t − l_{t−1});  v_t = (1−k_t)·pv_t
     init l_0 = y_0, v_0 = 1. Emits the filtered level and gain per point.
 
-    Same execution shape as holt_forecast: the t-recursion runs as T numpy
-    steps, each vectorized across every series of the Arrow batch; output
-    is exploded back to long (series, t, level, gain) form."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    Runs under series_kernel: series are independent, so the t-recursion
+    runs as T numpy steps, each vectorized across every series of the Arrow
+    batch; output is exploded back to long (series, t, level, gain) form."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            level = Y[:, 0].copy()
-            var = np.ones(len(arrs))
-            levels = [level.copy()]
-            gains = [np.zeros(len(arrs))]
-            for t in range(1, T):
-                active = t < n
-                pv = var + q
-                k = pv / (pv + r)
-                l_new = level + k * (Y[:, t] - level)
-                v_new = (1.0 - k) * pv
-                level = np.where(active, l_new, level)
-                var = np.where(active, v_new, var)
-                levels.append(level.copy())
-                gains.append(np.where(active, k, 0.0))
-            out = []
-            for i, s in enumerate(pdf[key]):
-                ln = int(n[i])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            key: s,
-                            "t": np.arange(ln),
-                            "level": [levels[t][i] for t in range(ln)],
-                            "gain": [gains[t][i] for t in range(ln)],
-                        }
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        level = Y[:, 0].copy()
+        var = np.ones(len(n))
+        levels = [level.copy()]
+        gains = [np.zeros(len(n))]
+        for t in range(1, Y.shape[1]):
+            active = t < n
+            pv = var + q
+            k = pv / (pv + r)
+            l_new = level + k * (Y[:, t] - level)
+            v_new = (1.0 - k) * pv
+            level = np.where(active, l_new, level)
+            var = np.where(active, v_new, var)
+            levels.append(level.copy())
+            gains.append(np.where(active, k, 0.0))
+        out = []
+        for i, s in enumerate(pdf[key]):
+            ln = int(n[i])
+            out.append(
+                pd.DataFrame(
+                    {
+                        key: s,
+                        "t": np.arange(ln),
+                        "level": [levels[t][i] for t in range(ln)],
+                        "gain": [gains[t][i] for t in range(ln)],
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(fn, f"{key} bigint, t bigint, level double, gain double")
+    return series_kernel(
+        df, kernel, f"{key} bigint, t bigint, level double, gain double", key, value
+    )
 
 
 def kalman_sql(inner: str, q: float = 0.01, r: float = 0.5) -> str:
@@ -394,62 +341,52 @@ def kalman_smoother(
     backward from sl_T = l_T. Emits filtered `level` and smoothed `smoothed`
     per point.
 
-    Execution shape matches holt/kalman: both sweeps are T numpy steps
-    vectorized across every series of the Arrow batch (series are the
-    parallel axis; the recursion is only over time)."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    Runs under series_kernel: series are independent and the recursion is
+    only over time, so both sweeps are T numpy steps vectorized across every
+    series of the Arrow batch."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            level = Y[:, 0].copy()
-            var = np.ones(len(arrs))
-            levels, vars_ = [level.copy()], [var.copy()]
-            for t in range(1, T):
-                active = t < n
-                pv = var + q
-                k = pv / (pv + r)
-                level = np.where(active, level + k * (Y[:, t] - level), level)
-                var = np.where(active, (1.0 - k) * pv, var)
-                levels.append(level.copy())
-                vars_.append(var.copy())
-            L = np.stack(levels, axis=1)   # (series, T) filtered means
-            V = np.stack(vars_, axis=1)    # (series, T) filtered vars
-            SL, SV = L.copy(), V.copy()    # last point: smoothed = filtered
-            for t in range(T - 2, -1, -1):
-                active = (t + 1) < n
-                c = V[:, t] / (V[:, t] + q)
-                sl = L[:, t] + c * (SL[:, t + 1] - L[:, t])
-                sv = V[:, t] + c * c * (SV[:, t + 1] - (V[:, t] + q))
-                SL[:, t] = np.where(active, sl, SL[:, t])
-                SV[:, t] = np.where(active, sv, SV[:, t])
-            out = []
-            for i, s in enumerate(pdf[key]):
-                ln = int(n[i])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            key: s,
-                            "t": np.arange(ln),
-                            "level": L[i, :ln],
-                            "smoothed": SL[i, :ln],
-                        }
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        T = Y.shape[1]
+        level = Y[:, 0].copy()
+        var = np.ones(len(n))
+        levels, vars_ = [level.copy()], [var.copy()]
+        for t in range(1, T):
+            active = t < n
+            pv = var + q
+            k = pv / (pv + r)
+            level = np.where(active, level + k * (Y[:, t] - level), level)
+            var = np.where(active, (1.0 - k) * pv, var)
+            levels.append(level.copy())
+            vars_.append(var.copy())
+        L = np.stack(levels, axis=1)   # (series, T) filtered means
+        V = np.stack(vars_, axis=1)    # (series, T) filtered vars
+        SL, SV = L.copy(), V.copy()    # last point: smoothed = filtered
+        for t in range(T - 2, -1, -1):
+            active = (t + 1) < n
+            c = V[:, t] / (V[:, t] + q)
+            sl = L[:, t] + c * (SL[:, t + 1] - L[:, t])
+            sv = V[:, t] + c * c * (SV[:, t + 1] - (V[:, t] + q))
+            SL[:, t] = np.where(active, sl, SL[:, t])
+            SV[:, t] = np.where(active, sv, SV[:, t])
+        out = []
+        for i, s in enumerate(pdf[key]):
+            ln = int(n[i])
+            out.append(
+                pd.DataFrame(
+                    {
+                        key: s,
+                        "t": np.arange(ln),
+                        "level": L[i, :ln],
+                        "smoothed": SL[i, :ln],
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(fn, f"{key} bigint, t bigint, level double, smoothed double")
+    return series_kernel(
+        df, kernel, f"{key} bigint, t bigint, level double, smoothed double", key, value
+    )
 
 
 def kalman_smoother_sql(inner: str, q: float = 0.01, r: float = 0.5) -> str:
@@ -507,66 +444,53 @@ def kalman_em(
         r̂ = mean_t[(y_t − sl_t)² + sv_t]
     Emits (key, n_points, q_hat, r_hat) per series; iterate by calling again
     with the updated parameters (each call is one distributed pass).
+
+    Runs under series_kernel: series are independent and the recursion is
+    only over time, so both sweeps are T numpy steps vectorized across every
+    series of the Arrow batch, and the M-step reduces with masked row-wise
+    sums — no per-series Python loop.
     """
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Execution shape matches kalman_smoother: both sweeps are T numpy
-        # steps vectorized across every series of the Arrow batch (series are
-        # the parallel axis; the recursion is only over time). No per-series
-        # Python loop — the M-step reduces with masked row-wise sums.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            level = Y[:, 0].copy()
-            var = np.ones(len(arrs))
-            levels, vars_ = [level.copy()], [var.copy()]
-            for t in range(1, T):
-                active = t < n
-                pv = var + q
-                k = pv / (pv + r)
-                level = np.where(active, level + k * (Y[:, t] - level), level)
-                var = np.where(active, (1.0 - k) * pv, var)
-                levels.append(level.copy())
-                vars_.append(var.copy())
-            L = np.stack(levels, axis=1)   # (series, T) filtered means
-            V = np.stack(vars_, axis=1)    # (series, T) filtered vars
-            SL, SV = L.copy(), V.copy()    # last point: smoothed = filtered
-            C = V / (V + q)  # smoother gains (only C[:, t-1] for t>=1 used)
-            for t in range(T - 2, -1, -1):
-                active = (t + 1) < n
-                sl = L[:, t] + C[:, t] * (SL[:, t + 1] - L[:, t])
-                sv = V[:, t] + C[:, t] * C[:, t] * (SV[:, t + 1] - (V[:, t] + q))
-                SL[:, t] = np.where(active, sl, SL[:, t])
-                SV[:, t] = np.where(active, sv, SV[:, t])
-            tcols = np.arange(T)
-            mq = tcols[None, 1:] < n[:, None]   # valid transition terms t=1..n-1
-            mr = tcols[None, :] < n[:, None]    # valid observation terms t=0..n-1
-            dq = (
-                (SL[:, 1:] - SL[:, :-1]) ** 2
-                + SV[:, 1:]
-                + SV[:, :-1]
-                - 2.0 * C[:, :-1] * SV[:, 1:]
-            )
-            dr = (Y - SL) ** 2 + SV
-            q_hat = np.where(mq, dq, 0.0).sum(axis=1) / np.maximum(n - 1, 1)
-            r_hat = np.where(mr, np.nan_to_num(dr), 0.0).sum(axis=1) / n
-            yield pd.DataFrame(
-                {key: pdf[key], "n_points": n, "q_hat": q_hat, "r_hat": r_hat}
-            )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        T = Y.shape[1]
+        level = Y[:, 0].copy()
+        var = np.ones(len(n))
+        levels, vars_ = [level.copy()], [var.copy()]
+        for t in range(1, T):
+            active = t < n
+            pv = var + q
+            k = pv / (pv + r)
+            level = np.where(active, level + k * (Y[:, t] - level), level)
+            var = np.where(active, (1.0 - k) * pv, var)
+            levels.append(level.copy())
+            vars_.append(var.copy())
+        L = np.stack(levels, axis=1)   # (series, T) filtered means
+        V = np.stack(vars_, axis=1)    # (series, T) filtered vars
+        SL, SV = L.copy(), V.copy()    # last point: smoothed = filtered
+        C = V / (V + q)  # smoother gains (only C[:, t-1] for t>=1 used)
+        for t in range(T - 2, -1, -1):
+            active = (t + 1) < n
+            sl = L[:, t] + C[:, t] * (SL[:, t + 1] - L[:, t])
+            sv = V[:, t] + C[:, t] * C[:, t] * (SV[:, t + 1] - (V[:, t] + q))
+            SL[:, t] = np.where(active, sl, SL[:, t])
+            SV[:, t] = np.where(active, sv, SV[:, t])
+        tcols = np.arange(T)
+        mq = tcols[None, 1:] < n[:, None]   # valid transition terms t=1..n-1
+        mr = tcols[None, :] < n[:, None]    # valid observation terms t=0..n-1
+        dq = (
+            (SL[:, 1:] - SL[:, :-1]) ** 2
+            + SV[:, 1:]
+            + SV[:, :-1]
+            - 2.0 * C[:, :-1] * SV[:, 1:]
+        )
+        dr = (Y - SL) ** 2 + SV
+        q_hat = np.where(mq, dq, 0.0).sum(axis=1) / np.maximum(n - 1, 1)
+        r_hat = np.where(mr, np.nan_to_num(dr), 0.0).sum(axis=1) / n
+        return pd.DataFrame({key: pdf[key], "n_points": n, "q_hat": q_hat, "r_hat": r_hat})
 
-    return wide.mapInPandas(
-        fn, f"{key} bigint, n_points bigint, q_hat double, r_hat double"
+    return series_kernel(
+        df, kernel, f"{key} bigint, n_points bigint, q_hat double, r_hat double", key, value
     )
 
 
@@ -643,47 +567,41 @@ def holt_winters(
     l = y_0, b = (y_m − y_0)/m, s_i = y_i − y_0 for i < m; the recursion
     consumes t = m..T−1. h-step forecast = l_T + h·b_T + s_{T−m+((h−1) mod m)+1}.
 
-    Kernel shape: T−m numpy steps, each vectorized across every series of
-    the Arrow batch; the seasonal state is an (n_series, m) matrix indexed
-    by t mod m. Requires equal-length series with T ≥ m+1 (generator
+    Runs under series_kernel: T−m numpy steps, each vectorized across every
+    series of the Arrow batch; the seasonal state is an (n_series, m) matrix
+    indexed by t mod m. Requires equal-length series with T ≥ m+1 (generator
     output)."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
     m = season
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Y = np.stack([np.asarray(v, dtype=float) for v in pdf["vs"]])
-            n, T = Y.shape
-            L = Y[:, 0].copy()
-            B = (Y[:, m] - Y[:, 0]) / m
-            S = Y[:, :m] - Y[:, [0]]
-            for t in range(m, T):
-                s_old = S[:, t % m]
-                l_new = alpha * (Y[:, t] - s_old) + (1.0 - alpha) * (L + B)
-                B = beta * (l_new - L) + (1.0 - beta) * B
-                S[:, t % m] = gamma * (Y[:, t] - l_new) + (1.0 - gamma) * s_old
-                L = l_new
-            out = []
-            for h in range(1, horizon + 1):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            key: pdf[key],
-                            "t": T - 1 + h,
-                            "h": h,
-                            "forecast": L + h * B + S[:, (T + h - 1) % m],
-                        }
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y = np.stack([np.asarray(v, dtype=float) for v in pdf["vs"]])
+        T = Y.shape[1]
+        L = Y[:, 0].copy()
+        B = (Y[:, m] - Y[:, 0]) / m
+        S = Y[:, :m] - Y[:, [0]]
+        for t in range(m, T):
+            s_old = S[:, t % m]
+            l_new = alpha * (Y[:, t] - s_old) + (1.0 - alpha) * (L + B)
+            B = beta * (l_new - L) + (1.0 - beta) * B
+            S[:, t % m] = gamma * (Y[:, t] - l_new) + (1.0 - gamma) * s_old
+            L = l_new
+        out = []
+        for h in range(1, horizon + 1):
+            out.append(
+                pd.DataFrame(
+                    {
+                        key: pdf[key],
+                        "t": T - 1 + h,
+                        "h": h,
+                        "forecast": L + h * B + S[:, (T + h - 1) % m],
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(fn, f"{key} bigint, t bigint, h bigint, forecast double")
+    return series_kernel(
+        df, kernel, f"{key} bigint, t bigint, h bigint, forecast double", key, value
+    )
 
 
 def holt_winters_sql(
@@ -830,47 +748,37 @@ def garch_filter(
         σ²_t = ω + α·r²_{t−1} + β·σ²_{t−1},   σ²_1 = ω/(1−α−β)
     (unconditional-variance init). Emits (series, t, ret, sigma2) for t ≥ 1.
 
-    Execution shape matches holt/kalman: series are the parallel axis of
-    each Arrow batch; the recursion runs as T vectorized numpy steps."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    Runs under series_kernel: series are independent, so the recursion runs
+    as T numpy steps, each vectorized across every series of the Arrow
+    batch."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            R = Y[:, 1:] - Y[:, :-1]  # returns, column t-1 holds r_{t}
-            s2 = np.full(len(arrs), omega / (1.0 - alpha - beta))
-            sigs = [s2.copy()]
-            for t in range(1, T - 1):
-                rp = R[:, t - 1]
-                s2 = omega + alpha * (rp * rp) + beta * s2
-                sigs.append(s2.copy())
-            out = []
-            for i, s in enumerate(pdf[key]):
-                ln = int(n[i]) - 1  # returns start at t=1
-                out.append(
-                    pd.DataFrame(
-                        {
-                            key: s,
-                            "t": np.arange(1, ln + 1),
-                            "ret": R[i, :ln],
-                            "sigma2": [sigs[t][i] for t in range(ln)],
-                        }
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        R = Y[:, 1:] - Y[:, :-1]  # returns, column t-1 holds r_{t}
+        s2 = np.full(len(n), omega / (1.0 - alpha - beta))
+        sigs = [s2.copy()]
+        for t in range(1, Y.shape[1] - 1):
+            rp = R[:, t - 1]
+            s2 = omega + alpha * (rp * rp) + beta * s2
+            sigs.append(s2.copy())
+        out = []
+        for i, s in enumerate(pdf[key]):
+            ln = int(n[i]) - 1  # returns start at t=1
+            out.append(
+                pd.DataFrame(
+                    {
+                        key: s,
+                        "t": np.arange(1, ln + 1),
+                        "ret": R[i, :ln],
+                        "sigma2": [sigs[t][i] for t in range(ln)],
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(fn, f"{key} bigint, t bigint, ret double, sigma2 double")
+    return series_kernel(
+        df, kernel, f"{key} bigint, t bigint, ret double, sigma2 double", key, value
+    )
 
 
 def garch_sql(
@@ -911,48 +819,36 @@ def arma11_filter(
         e_t = y_t − φ·y_{t−1} − θ·e_{t−1},   e_0 = 0
     plus the one-step-ahead forecast ŷ_{t+1|t} = φ·y_t + θ·e_t. The
     innovation sequence is the whitened residual an ARMA diagnostic or a
-    fitting loop consumes. Same execution shape as garch/kalman: series are
-    the Arrow-batch axis, the recursion is T vectorized numpy steps."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    fitting loop consumes. Runs under series_kernel: series are independent,
+    so the recursion is T numpy steps, each vectorized across every series
+    of the Arrow batch."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            e = np.zeros(len(arrs))
-            es = [e.copy()]
-            for t in range(1, T):
-                e = Y[:, t] - phi * Y[:, t - 1] - theta * e
-                es.append(e.copy())
-            out = []
-            for i, s in enumerate(pdf[key]):
-                ln = int(n[i])
-                ei = np.array([es[t][i] for t in range(ln)])
-                fc = phi * Y[i, :ln] + theta * ei
-                out.append(
-                    pd.DataFrame(
-                        {
-                            key: s,
-                            "t": np.arange(ln),
-                            "innovation": ei,
-                            "fc_next": fc,
-                        }
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        e = np.zeros(len(n))
+        es = [e.copy()]
+        for t in range(1, Y.shape[1]):
+            e = Y[:, t] - phi * Y[:, t - 1] - theta * e
+            es.append(e.copy())
+        out = []
+        for i, s in enumerate(pdf[key]):
+            ln = int(n[i])
+            ei = np.array([es[t][i] for t in range(ln)])
+            fc = phi * Y[i, :ln] + theta * ei
+            out.append(
+                pd.DataFrame(
+                    {
+                        key: s,
+                        "t": np.arange(ln),
+                        "innovation": ei,
+                        "fc_next": fc,
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(
-        fn, f"{key} bigint, t bigint, innovation double, fc_next double"
+    return series_kernel(
+        df, kernel, f"{key} bigint, t bigint, innovation double, fc_next double", key, value
     )
 
 
@@ -987,43 +883,38 @@ def ses_backtest(
     with the SES level l_t (l_0 = v_0; l_t = l_{t-1} + α(v_t − l_{t-1})),
     so e_{t+1} = v_{t+1} − l_t. Emits per-series MAE, RMSE, and MASE
     (errors scaled by the in-sample naive |v_t − v_{t-1}| mean — Hyndman &
-    Koehler 2006). Same mapInPandas shape as kalman/garch."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    Koehler 2006). Runs under series_kernel, one series per kernel row: the
+    level recursion needs the whole t-sorted series."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for s, vs in zip(pdf[key], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                lvl = y[0]
-                errs = []
-                for t in range(1, n):
-                    errs.append(y[t] - lvl)
-                    lvl = lvl + alpha * (y[t] - lvl)
-                e = np.asarray(errs)
-                naive = np.abs(np.diff(y)).mean()
-                rows.append(
-                    (
-                        s,
-                        n - 1,
-                        float(np.abs(e).mean()),
-                        float(np.sqrt((e * e).mean())),
-                        float(np.abs(e).mean() / naive),
-                    )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for s, vs in zip(pdf[key], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            n = len(y)
+            lvl = y[0]
+            errs = []
+            for t in range(1, n):
+                errs.append(y[t] - lvl)
+                lvl = lvl + alpha * (y[t] - lvl)
+            e = np.asarray(errs)
+            naive = np.abs(np.diff(y)).mean()
+            rows.append(
+                (
+                    s,
+                    n - 1,
+                    float(np.abs(e).mean()),
+                    float(np.sqrt((e * e).mean())),
+                    float(np.abs(e).mean() / naive),
                 )
-            yield pd.DataFrame(
-                rows, columns=[key, "n_origins", "mae", "rmse", "mase"]
             )
+        return pd.DataFrame(rows, columns=[key, "n_origins", "mae", "rmse", "mase"])
 
-    return wide.mapInPandas(
-        fn, f"{key} bigint, n_origins bigint, mae double, rmse double, mase double"
+    return series_kernel(
+        df,
+        kernel,
+        f"{key} bigint, n_origins bigint, mae double, rmse double, mase double",
+        key,
+        value,
     )
 
 
@@ -1060,6 +951,27 @@ FROM agg JOIN naive ON naive.series_id = agg.series_id
 """
 
 
+def _backtest_sums(y: np.ndarray, alpha: float, beta: float) -> tuple[float, ...]:
+    """One-step rolling-origin pass of SES, Holt (error-correction form) and
+    naive over y → (l_ses, l_holt, b_holt, Σ|e_ses|, Σ|e_holt|, Σ|e_naive|),
+    in the association order the model_select/forecast_combo oracles use."""
+    l_s = y[0]
+    l_h, b_h = y[0], 0.0
+    s_ses = s_holt = s_nv = 0.0
+    for t in range(1, len(y)):
+        e_s = y[t] - l_s
+        s_ses += abs(e_s)
+        l_s = l_s + alpha * e_s
+        p_h = l_h + b_h
+        e_h = y[t] - p_h
+        s_holt += abs(e_h)
+        l_new = p_h + alpha * e_h
+        b_h = b_h + beta * ((l_new - l_h) - b_h)
+        l_h = l_new
+        s_nv += abs(y[t] - y[t - 1])
+    return l_s, l_h, b_h, s_ses, s_holt, s_nv
+
+
 def model_select(
     df: DataFrame,
     alpha: float = 0.3,
@@ -1074,48 +986,29 @@ def model_select(
     Error-correction updates (l + a·(y−l)) are used in BOTH engines —
     algebraically equal to the textbook blend form but not bit-equal, so
     one form is canon. Ties (e.g., MASE exactly 1) break ses<holt<naive.
-    Kalman-shape mapInPandas; the oracle replays all three recursions in
-    one recursive CTE."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    Runs under series_kernel, one series per kernel row; the oracle replays
+    all three recursions in one recursive CTE."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for s, vs in zip(pdf[key], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                l_s = y[0]
-                l_h, b_h = y[0], 0.0
-                s_ses = s_holt = s_nv = 0.0
-                for t in range(1, n):
-                    e_s = y[t] - l_s
-                    s_ses += abs(e_s)
-                    l_s = l_s + alpha * e_s
-                    p_h = l_h + b_h
-                    e_h = y[t] - p_h
-                    s_holt += abs(e_h)
-                    l_new = p_h + alpha * e_h
-                    b_h = b_h + beta * ((l_new - l_h) - b_h)
-                    l_h = l_new
-                    s_nv += abs(y[t] - y[t - 1])
-                m_ses = s_ses / s_nv
-                m_holt = s_holt / s_nv
-                cand = [(m_ses, 0, "ses"), (m_holt, 1, "holt"), (1.0, 2, "naive")]
-                best = min(cand)[2]
-                rows.append((s, n - 1, m_ses, m_holt, best))
-            yield pd.DataFrame(
-                rows, columns=[key, "n_origins", "mase_ses", "mase_holt", "best_model"]
-            )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for s, vs in zip(pdf[key], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            _, _, _, s_ses, s_holt, s_nv = _backtest_sums(y, alpha, beta)
+            m_ses = s_ses / s_nv
+            m_holt = s_holt / s_nv
+            cand = [(m_ses, 0, "ses"), (m_holt, 1, "holt"), (1.0, 2, "naive")]
+            best = min(cand)[2]
+            rows.append((s, len(y) - 1, m_ses, m_holt, best))
+        return pd.DataFrame(
+            rows, columns=[key, "n_origins", "mase_ses", "mase_holt", "best_model"]
+        )
 
-    return wide.mapInPandas(
-        fn,
+    return series_kernel(
+        df,
+        kernel,
         f"{key} bigint, n_origins bigint, mase_ses double, mase_holt double, best_model string",
+        key,
+        value,
     )
 
 
@@ -1170,62 +1063,42 @@ def forecast_combo(
 
         combo_imae = (f_s/S_s + f_h/S_h + f_n/S_n) / (1/S_s + 1/S_h + 1/S_n)
 
-    written in exactly that association order in BOTH engines. Same
-    Kalman-shape mapInPandas as model_select — series is the parallel
-    axis; the oracle replays the recursion once and cross-joins the
-    horizon grid. → (series_id, h, f_ses, f_holt, f_naive, combo_eq,
-    combo_imae)."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    written in exactly that association order in BOTH engines. Runs under
+    series_kernel, one series per kernel row; the oracle replays the
+    recursion once and cross-joins the horizon grid. → (series_id, h,
+    f_ses, f_holt, f_naive, combo_eq, combo_imae)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for s, vs in zip(pdf[key], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                l_s = y[0]
-                l_h, b_h = y[0], 0.0
-                s_ses = s_holt = s_nv = 0.0
-                for t in range(1, n):
-                    e_s = y[t] - l_s
-                    s_ses += abs(e_s)
-                    l_s = l_s + alpha * e_s
-                    p_h = l_h + b_h
-                    e_h = y[t] - p_h
-                    s_holt += abs(e_h)
-                    l_new = p_h + alpha * e_h
-                    b_h = b_h + beta * ((l_new - l_h) - b_h)
-                    l_h = l_new
-                    s_nv += abs(y[t] - y[t - 1])
-                last = y[n - 1]
-                for h in range(1, horizon + 1):
-                    f_s, f_h, f_n = l_s, l_h + h * b_h, last
-                    eq = (f_s + f_h + f_n) / 3.0
-                    # constant / length-1 series: some error sum is 0, so
-                    # inverse-MAE weights are undefined (numpy inf/nan vs
-                    # DuckDB NULL) — fall back to equal weights, both engines
-                    if s_ses == 0.0 or s_holt == 0.0 or s_nv == 0.0:
-                        imae = eq
-                    else:
-                        imae = (f_s / s_ses + f_h / s_holt + f_n / s_nv) / (
-                            1.0 / s_ses + 1.0 / s_holt + 1.0 / s_nv
-                        )
-                    rows.append((s, h, f_s, f_h, f_n, eq, imae))
-            yield pd.DataFrame(
-                rows,
-                columns=[key, "h", "f_ses", "f_holt", "f_naive", "combo_eq", "combo_imae"],
-            )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for s, vs in zip(pdf[key], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            l_s, l_h, b_h, s_ses, s_holt, s_nv = _backtest_sums(y, alpha, beta)
+            last = y[-1]
+            for h in range(1, horizon + 1):
+                f_s, f_h, f_n = l_s, l_h + h * b_h, last
+                eq = (f_s + f_h + f_n) / 3.0
+                # constant / length-1 series: some error sum is 0, so
+                # inverse-MAE weights are undefined (numpy inf/nan vs
+                # DuckDB NULL) — fall back to equal weights, both engines
+                if s_ses == 0.0 or s_holt == 0.0 or s_nv == 0.0:
+                    imae = eq
+                else:
+                    imae = (f_s / s_ses + f_h / s_holt + f_n / s_nv) / (
+                        1.0 / s_ses + 1.0 / s_holt + 1.0 / s_nv
+                    )
+                rows.append((s, h, f_s, f_h, f_n, eq, imae))
+        return pd.DataFrame(
+            rows,
+            columns=[key, "h", "f_ses", "f_holt", "f_naive", "combo_eq", "combo_imae"],
+        )
 
-    return wide.mapInPandas(
-        fn,
+    return series_kernel(
+        df,
+        kernel,
         f"{key} bigint, h bigint, f_ses double, f_holt double, f_naive double,"
         " combo_eq double, combo_imae double",
+        key,
+        value,
     )
 
 
@@ -1288,57 +1161,44 @@ def conformal_ses(
     k = min(m, ⌈(m+1)(1−miscoverage)⌉) — an exact order statistic, NO
     distributional assumption. Emits per series the point forecast, the
     [lo, hi] band, and the finite-sample calibration coverage (≥ 1−miscov
-    by construction). Same kalman-shape execution as holt_forecast: the
-    level recursion runs T numpy steps vectorized across the Arrow batch;
-    the oracle replays it in a recursive CTE and takes the identical order
-    statistic."""
+    by construction). Runs under series_kernel: series are independent, so
+    the level recursion runs T numpy steps vectorized across the Arrow
+    batch; the oracle replays it in a recursive CTE and takes the identical
+    order statistic."""
     import math as _math
 
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
     oma = 1.0 - alpha
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(v, dtype=float) for v in pdf["vs"]]
-            n = np.array([len(a) for a in arrs])
-            T = int(n.max())
-            Y = np.full((len(arrs), T), np.nan)
-            for i, a in enumerate(arrs):
-                Y[i, : len(a)] = a
-            L = np.empty((len(arrs), T))
-            L[:, 0] = Y[:, 0]
-            for t in range(1, T):
-                active = t < n
-                l_new = alpha * Y[:, t] + oma * L[:, t - 1]
-                L[:, t] = np.where(active, l_new, L[:, t - 1])
-            rows = []
-            for i, k_ in enumerate(pdf[key]):
-                ni = int(n[i])
-                scores = [
-                    (abs(float(Y[i, t]) - float(L[i, t - 1])), t)
-                    for t in range(burn, ni)
-                ]
-                m = len(scores)
-                kk = min(m, _math.ceil((m + 1) * (1.0 - miscoverage)))
-                qhat = sorted(scores)[kk - 1][0]
-                cov = sum(1 for r, _ in scores if r <= qhat) / m
-                fc = float(L[i, ni - 1])
-                rows.append((int(k_), m, fc, qhat, fc - qhat, fc + qhat, cov))
-            yield pd.DataFrame(
-                rows,
-                columns=[key, "n_cal", "fc", "qhat", "lo", "hi", "coverage"],
-            )
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        Y, n = _pad(pdf["vs"])
+        L = np.empty(Y.shape)
+        L[:, 0] = Y[:, 0]
+        for t in range(1, Y.shape[1]):
+            active = t < n
+            l_new = alpha * Y[:, t] + oma * L[:, t - 1]
+            L[:, t] = np.where(active, l_new, L[:, t - 1])
+        rows = []
+        for i, k_ in enumerate(pdf[key]):
+            ni = int(n[i])
+            scores = [
+                (abs(float(Y[i, t]) - float(L[i, t - 1])), t)
+                for t in range(burn, ni)
+            ]
+            m = len(scores)
+            kk = min(m, _math.ceil((m + 1) * (1.0 - miscoverage)))
+            qhat = sorted(scores)[kk - 1][0]
+            cov = sum(1 for r, _ in scores if r <= qhat) / m
+            fc = float(L[i, ni - 1])
+            rows.append((int(k_), m, fc, qhat, fc - qhat, fc + qhat, cov))
+        return pd.DataFrame(rows, columns=[key, "n_cal", "fc", "qhat", "lo", "hi", "coverage"])
 
-    return wide.mapInPandas(
-        fn,
+    return series_kernel(
+        df,
+        kernel,
         f"{key} bigint, n_cal bigint, fc double, qhat double, "
         "lo double, hi double, coverage double",
+        key,
+        value,
     )
 
 

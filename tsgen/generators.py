@@ -14,6 +14,8 @@ Scale notes (100 TB design):
 """
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -139,18 +141,48 @@ def generate_multichannel(
     return df
 
 
-def to_wide(df: DataFrame, keys: list[str] | None = None, value_col: str = "value") -> DataFrame:
-    """Long → wide: one row per series with a t-sorted ARRAY<DOUBLE> —
-    the pandas-UDF-boundary representation (SURVEY §1.4)."""
+def to_wide(
+    df: DataFrame, keys: list[str] | None = None, value_col: str = "value", order: str = "t"
+) -> DataFrame:
+    """Long → wide: one row per series, `(*keys, vs ARRAY<DOUBLE>)` with `vs`
+    sorted by `order` — the pandas-UDF-boundary representation (SURVEY §1.4).
+
+    The one shuffle is the groupBy; sorting (order, v) structs and then
+    projecting `.v` happens JVM-side, so only the value array crosses Arrow."""
     keys = keys or ["series_id"]
     return (
         df.groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value_col).alias("v")))).alias("_pts"))
-        .select(*keys, F.col("_pts.v").alias("values"))
+        .agg(F.array_sort(F.collect_list(F.struct(order, F.col(value_col).alias("v")))).alias("_pts"))
+        .select(*keys, F.col("_pts.v").alias("vs"))
     )
 
 
-def to_long(df: DataFrame, keys: list[str] | None = None, values_col: str = "values") -> DataFrame:
+def series_kernel(
+    df: DataFrame,
+    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: str,
+    key: str = "series_id",
+    value: str = "value",
+    order: str = "t",
+) -> DataFrame:
+    """Run a whole-series numpy kernel over every series of long-format `df`.
+
+    Packs with `to_wide`, then one `mapInPandas`: `fn(pdf)` is called once
+    per non-empty Arrow batch, where `pdf` holds columns `key` and `vs` (one
+    row per series, each `vs` sorted by `order`), and must return a frame
+    matching `schema`. Series are the batch axis, so a recursion over time
+    runs as one numpy step per time index across the whole batch. Plan: one
+    shuffle on `key`, collect_list, MapInPandas."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield fn(pdf)
+
+    return to_wide(df, [key], value, order).mapInPandas(run, schema)
+
+
+def to_long(df: DataFrame, keys: list[str] | None = None, values_col: str = "vs") -> DataFrame:
     """Wide → long via posexplode (inverse of to_wide)."""
     keys = keys or ["series_id"]
     return df.select(

@@ -17,10 +17,6 @@ def mse(df: DataFrame, pred: str, target: str, out: str = "mse") -> DataFrame:
     return df.agg(F.avg(F.pow(F.col(pred) - F.col(target), 2)).alias(out))
 
 
-def mse_sql(inner: str, pred: str, target: str, out: str = "mse") -> str:
-    return f"SELECT avg(pow({pred} - {target}, 2)) AS {out} FROM ({inner})"
-
-
 def fourier_loss(df: DataFrame, pred: str, target: str, seq_len: int) -> DataFrame:
     """Time-domain MSE + magnitude-spectrum MSE; returns 1 row
     (time_loss, freq_loss, fourier_loss)."""

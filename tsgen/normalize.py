@@ -9,12 +9,11 @@ window, because the window needs a full sort of every row within each
 partition while the join only hashes. When the stats side is small enough
 Spark/AQE turns the join into a broadcast and the BIG side is never
 shuffled at all — the whole generator+znorm pipeline then has exactly one
-tiny shuffle (the 3-doubles-per-series aggregate). The window variant is
-kept for callers that already have the right partitioning.
+tiny shuffle (the 3-doubles-per-series aggregate).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 EPS = 1e-8
 
@@ -39,15 +38,6 @@ def znorm(
         .withColumn(value_col, (F.col(value_col) - F.col("_mu")) / (F.col("_sd") + F.lit(EPS)))
         .drop("_mu", "_sd")
     )
-
-
-def znorm_window(df: DataFrame, value_col: str = "value", key: str = "series_id") -> DataFrame:
-    """Window-based variant: use when the per-key stats table would be too
-    large to broadcast AND the data is already partitioned by key."""
-    w = Window.partitionBy(key)
-    mean = F.avg(value_col).over(w)
-    std = F.stddev_samp(value_col).over(w)
-    return df.withColumn(value_col, (F.col(value_col) - mean) / (std + F.lit(EPS)))
 
 
 # SQL fragment for the DuckDB oracle (identical semantics)

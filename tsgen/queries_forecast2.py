@@ -397,9 +397,10 @@ def forecast_reconcile(ev: DataFrame, alpha: float = RECON_ALPHA) -> DataFrame:
     coherence gap bottom-up closes.
 
     Execution: the node series table (leaves ∪ total) is one groupBy plus
-    one rollup-style re-aggregation; SES runs once over ALL nodes in a
-    kalman-shape mapInPandas (nodes are the Arrow-batch axis); shares and
-    the reconciliation arithmetic live on an n_nodes-row table."""
+    one rollup-style re-aggregation; SES runs once over ALL nodes under
+    series_kernel (each node's buckets arrive as one bk-sorted array, nodes
+    are the Arrow-batch axis); shares and the reconciliation arithmetic
+    live on an n_nodes-row table."""
     import pandas as pd
 
     b = ev.groupBy(
@@ -413,30 +414,23 @@ def forecast_reconcile(ev: DataFrame, alpha: float = RECON_ALPHA) -> DataFrame:
         F.lit("total").alias("node"), "bk", "v"
     )
     nodes = leaves.unionByName(total)
-    wide = (
-        nodes.groupBy("node")
-        .agg(F.array_sort(F.collect_list(F.struct("bk", F.col("v").alias("x")))).alias("pts"))
-        .select("node", F.col("pts.x").alias("vs"))
-    )
     oma = 1.0 - alpha
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for node, vs in zip(pdf["node"], pdf["vs"]):
-                l = float(vs[0])
-                tot = 0.0
-                for x in vs:
-                    tot = tot + float(x)
-                for x in vs[1:]:
-                    l = alpha * float(x) + oma * l
-                rows.append((str(node), l, tot))
-            yield pd.DataFrame(rows, columns=["node", "base_fc", "hist_sum"])
+    def kernel(pdf):
+        rows = []
+        for node, vs in zip(pdf["node"], pdf["vs"]):
+            l = float(vs[0])
+            tot = 0.0
+            for x in vs:
+                tot = tot + float(x)
+            for x in vs[1:]:
+                l = alpha * float(x) + oma * l
+            rows.append((str(node), l, tot))
+        return pd.DataFrame(rows, columns=["node", "base_fc", "hist_sum"])
 
-    fc = wide.mapInPandas(
-        fn, "node string, base_fc double, hist_sum double"
+    fc = generators.series_kernel(
+        nodes, kernel, "node string, base_fc double, hist_sum double",
+        key="node", value="v", order="bk",
     ).localCheckpoint(eager=False)  # n_nodes rows, read by 3 branches
     tot_row = fc.filter(F.col("node") == "total").select(
         F.col("base_fc").alias("tot_fc"), F.col("hist_sum").alias("tot_hist")

@@ -149,16 +149,14 @@ def _q_patch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # t = patch_id·p + pos. Output ≡ the original series — the oracle is the
     # generator itself, so the round-trip identity is driver-hash-checked.
     df = generators.generate(spark, 8, 64, "mixed")
-    packed = (
-        df.withColumn("patch_id", F.expr(f"t DIV {PATCH}"))
-        .withColumn("pos", F.expr(f"t % {PATCH}"))
-        .groupBy("series_id", "patch_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", F.col("value").alias("v")))).alias("patch"))
+    patches = df.withColumn("patch_id", F.expr(f"t DIV {PATCH}")).withColumn(
+        "pos", F.expr(f"t % {PATCH}")
     )
+    packed = generators.to_wide(patches, ["series_id", "patch_id"], order="pos")
     unpacked = packed.select(
         "series_id",
         "patch_id",
-        F.posexplode(F.col("patch.v")).alias("pos", "value"),
+        F.posexplode("vs").alias("pos", "value"),
     ).select(
         "series_id",
         (F.col("patch_id") * PATCH + F.col("pos")).cast("bigint").alias("t"),
@@ -327,7 +325,7 @@ def _q_ses(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ses_sql() -> str:
     # closed form of the SES recursion (same identity the Spark side
-    # vectorizes, tsgen/forecast.py:75-79): level_{n−1} = (1−α)^(n−1)·y_0
+    # vectorizes in forecast.ses_forecast): level_{n−1} = (1−α)^(n−1)·y_0
     # + α·Σ_{t≥1} (1−α)^(n−1−t)·y_t — a plain weighted aggregation in SQL
     gen = oracle.generate_sql(8, 64, "mixed", rounded=False)
     return f"""

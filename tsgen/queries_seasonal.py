@@ -744,8 +744,8 @@ def matrix_profile(
     non-trivial neighbor window in the SAME series (exclusion zone m//2) —
     the primitive under motif discovery and discord (anomaly) detection.
 
-    Execution shape: series are the parallel axis (one groupBy collect to
-    wide form — the decompose/forecast pattern); per series the kernel is
+    Runs under series_kernel: each series arrives whole and t-sorted, and
+    series are the parallel axis; per series the kernel is
     pure matrix algebra (window-matrix Gram product), not a Python loop per
     pair. Exact O(n_w²) per series, which is the right baseline at the
     reference's seq_len≈512; the O(n log n) MASS/STOMP refinement drops in
@@ -756,42 +756,36 @@ def matrix_profile(
     between the numpy Gram product and the oracle's SQL sums can't flip
     the argmin; the emitted mp is rounded by the caller (4dp — it is a
     sum of m products)."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
     excl = m // 2
 
-    def fn(batches: "pd.Iterator") -> "pd.Iterator":
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for sid, vs in zip(pdf[key], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                nw = len(y) - m + 1
-                X = np.lib.stride_tricks.sliding_window_view(y, m)
-                mu = X.mean(axis=1)
-                # same formula text as the oracle (avg(v²) − avg(v)²)
-                sd = np.sqrt(np.maximum((X * X).mean(axis=1) - mu * mu, 1e-24))
-                G = X @ X.T
-                d2 = 2.0 * m * (1.0 - (G - m * np.outer(mu, mu)) / (m * np.outer(sd, sd)))
-                d = np.sqrt(np.maximum(d2, 0.0))
-                ii, jj = np.indices((nw, nw))
-                d[np.abs(ii - jj) < excl] = np.inf
-                dr = np.round(d + 1e-9, 6)
-                nn = np.argmin(dr, axis=1)  # first min = smallest j on ties
-                mp = d[np.arange(nw), nn]
-                out.append(pd.DataFrame({
-                    key: sid, "i": np.arange(nw), "mp": mp, "nn": nn,
-                }))
-            yield pd.concat(out, ignore_index=True)
+        out = []
+        for sid, vs in zip(pdf[key], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            nw = len(y) - m + 1
+            X = np.lib.stride_tricks.sliding_window_view(y, m)
+            mu = X.mean(axis=1)
+            # same formula text as the oracle (avg(v²) − avg(v)²)
+            sd = np.sqrt(np.maximum((X * X).mean(axis=1) - mu * mu, 1e-24))
+            G = X @ X.T
+            d2 = 2.0 * m * (1.0 - (G - m * np.outer(mu, mu)) / (m * np.outer(sd, sd)))
+            d = np.sqrt(np.maximum(d2, 0.0))
+            ii, jj = np.indices((nw, nw))
+            d[np.abs(ii - jj) < excl] = np.inf
+            dr = np.round(d + 1e-9, 6)
+            nn = np.argmin(dr, axis=1)  # first min = smallest j on ties
+            mp = d[np.arange(nw), nn]
+            out.append(pd.DataFrame({
+                key: sid, "i": np.arange(nw), "mp": mp, "nn": nn,
+            }))
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(fn, f"{key} bigint, i bigint, mp double, nn bigint")
+    return generators.series_kernel(
+        df, kernel, f"{key} bigint, i bigint, mp double, nn bigint", key, value
+    )
 
 
 def _q_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,44 +846,36 @@ def motif_topk(
     """Top-k motif pairs per series (matrix-profile motif discovery, Yeh et
     al. ICDM 2016 §IV): the k closest pairs of length-`m` windows (i < j,
     outside the trivial-match exclusion zone) under z-normalized Euclidean
-    distance. Same wide-form mapInPandas shape as matrix_profile — series
-    are the parallel axis, the kernel is one Gram product; ranking is by
+    distance. Runs under series_kernel: each series arrives whole and
+    t-sorted, the kernel is one Gram product per series; ranking is by
     (6dp-rounded distance, i, j) so argsort ties are engine-portable."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
     excl = m // 2
 
-    def fn(batches: "pd.Iterator") -> "pd.Iterator":
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for sid, vs in zip(pdf[key], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                nw = len(y) - m + 1
-                X = np.lib.stride_tricks.sliding_window_view(y, m)
-                mu = X.mean(axis=1)
-                sd = np.sqrt(np.maximum((X * X).mean(axis=1) - mu * mu, 1e-24))
-                G = X @ X.T
-                d2 = 2.0 * m * (1.0 - (G - m * np.outer(mu, mu)) / (m * np.outer(sd, sd)))
-                d = np.sqrt(np.maximum(d2, 0.0))
-                ii, jj = np.triu_indices(nw, k=excl)  # i < j, |i-j| >= excl
-                dr = np.round(d[ii, jj] + 1e-9, 6)
-                order = np.lexsort((jj, ii, dr))[:k]
-                out.append(pd.DataFrame({
-                    key: sid, "rank": np.arange(1, len(order) + 1),
-                    "i": ii[order], "j": jj[order], "dist": d[ii, jj][order],
-                }))
-            yield pd.concat(out, ignore_index=True)
+        out = []
+        for sid, vs in zip(pdf[key], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            nw = len(y) - m + 1
+            X = np.lib.stride_tricks.sliding_window_view(y, m)
+            mu = X.mean(axis=1)
+            sd = np.sqrt(np.maximum((X * X).mean(axis=1) - mu * mu, 1e-24))
+            G = X @ X.T
+            d2 = 2.0 * m * (1.0 - (G - m * np.outer(mu, mu)) / (m * np.outer(sd, sd)))
+            d = np.sqrt(np.maximum(d2, 0.0))
+            ii, jj = np.triu_indices(nw, k=excl)  # i < j, |i-j| >= excl
+            dr = np.round(d[ii, jj] + 1e-9, 6)
+            order = np.lexsort((jj, ii, dr))[:k]
+            out.append(pd.DataFrame({
+                key: sid, "rank": np.arange(1, len(order) + 1),
+                "i": ii[order], "j": jj[order], "dist": d[ii, jj][order],
+            }))
+        return pd.concat(out, ignore_index=True)
 
-    return wide.mapInPandas(
-        fn, f"{key} bigint, rank bigint, i bigint, j bigint, dist double"
+    return generators.series_kernel(
+        df, kernel, f"{key} bigint, rank bigint, i bigint, j bigint, dist double", key, value
     )
 
 
@@ -1126,16 +1112,12 @@ def dtw_pairs(
     D(i,j−1), D(i−1,j−1)) is sequential along ANTI-DIAGONALS — cells on one
     diagonal depend only on the previous two — so the kernel loops over the
     n+m−1 diagonals and vectorizes each update across (pairs × diagonal
-    cells), the same time-axis-only loop discipline as the forecast
-    kernels. All-pairs is O(P²) by nature: the scale path is pairing
+    cells), so the Python loop runs over diagonals only, never over pairs
+    or cells. Each pair's two series come from one to_wide pack. All-pairs is O(P²) by nature: the scale path is pairing
     against a fixed reference set or LB_Keogh-pruned candidates, both of
     which reuse this kernel unchanged; the oracle-checkable unit here is
     all pairs of a bounded series set."""
-    wide = (
-        df.groupBy(key)
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col(value).alias("v")))).alias("pts"))
-        .select(key, F.col("pts.v").alias("vs"))
-    )
+    wide = generators.to_wide(df, [key], value)
     a = wide.select(
         F.col(key).alias("series_a"), F.col("vs").alias("a_vs")
     )

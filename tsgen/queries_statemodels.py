@@ -87,14 +87,7 @@ def hmm_decode(df: DataFrame) -> DataFrame:
     init, ev, vit_merge, fwd_merge, lse_final = _hmm_exprs(spark_dialect=True)
     lo, hi = E.NUM(HMM_CUT_LO), E.NUM(HMM_CUT_HI)
     wide = (
-        roundn(df, 6, "value")
-        .groupBy("series_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("t", F.col("value").alias("v")))
-            ).alias("p")
-        )
-        .select("series_id", F.col("p.v").alias("vs"))
+        generators.to_wide(roundn(df, 6, "value"))
         .withColumn(
             "obs",
             F.expr(

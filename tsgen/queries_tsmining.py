@@ -492,37 +492,29 @@ def haar_energy(df: DataFrame) -> DataFrame:
     (a-b)/sqrt2 details contribute that level's energy; level 0 is the
     final approximation coefficient's energy. Parseval: levels sum to the
     series' total energy (asserted in tests). Series length must be a
-    power of 2 (generated grid). Kalman-shape mapInPandas; the oracle
+    power of 2 (generated grid). Runs under series_kernel (each series
+    arrives whole and t-sorted); the oracle
     replays the cascade with LIST state in a recursive CTE."""
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
-
-    def fn(batches):
+    def kernel(pdf):
         import numpy as np
 
         r2 = np.sqrt(2.0)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                a = np.asarray(vs, dtype=float)
-                level = 1
-                while len(a) > 1:
-                    det = (a[0::2] - a[1::2]) / r2
-                    a = (a[0::2] + a[1::2]) / r2
-                    rows.append((int(sid), level, len(det), float((det * det).sum())))
-                    level += 1
-                rows.append((int(sid), 0, 1, float(a[0] * a[0])))
-            yield pd.DataFrame(rows, columns=["series_id", "level", "n_coeffs", "energy"])
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            a = np.asarray(vs, dtype=float)
+            level = 1
+            while len(a) > 1:
+                det = (a[0::2] - a[1::2]) / r2
+                a = (a[0::2] + a[1::2]) / r2
+                rows.append((int(sid), level, len(det), float((det * det).sum())))
+                level += 1
+            rows.append((int(sid), 0, 1, float(a[0] * a[0])))
+        return pd.DataFrame(rows, columns=["series_id", "level", "n_coeffs", "energy"])
 
-    return wide.mapInPandas(
-        fn, "series_id bigint, level bigint, n_coeffs bigint, energy double"
+    return generators.series_kernel(
+        df, kernel, "series_id bigint, level bigint, n_coeffs bigint, energy double"
     )
 
 
@@ -567,7 +559,8 @@ def optimal_segmentation(df: DataFrame, beta: float = SEG_BETA) -> DataFrame:
     (start, end, length, mean). Upgrades the single-changepoint detector
     (ts_changepoint) to the full multi-changepoint optimum.
 
-    Execution: kalman-shape mapInPandas; the O(n^2) DP vectorizes the tau
+    Execution: series_kernel (each series arrives whole and t-sorted);
+    the O(n^2) DP vectorizes the tau
     axis per step (n = series length, bounded — 128 here; the distributed
     axis is series count). The oracle replays the SAME DP in a recursive
     CTE with LIST state (F and argmin-pointer lists), then a second
@@ -575,58 +568,50 @@ def optimal_segmentation(df: DataFrame, beta: float = SEG_BETA) -> DataFrame:
     both engines, and every float op matches elementwise."""
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
-
-    def fn(batches):
+    def kernel(pdf):
         import numpy as np
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                s1 = np.concatenate([[0.0], np.cumsum(y)])
-                s2 = np.concatenate([[0.0], np.cumsum(y * y)])
-                fv = np.empty(n + 1)
-                fv[0] = -beta
-                prev = np.zeros(n + 1, dtype=int)
-                for t in range(1, n + 1):
-                    taus = np.arange(t)
-                    d1 = s1[t] - s1[taus]
-                    d2 = s2[t] - s2[taus]
-                    cand = (fv[:t] + (d2 - d1 * d1 / (t - taus))) + beta
-                    j = int(np.argmin(cand))
-                    fv[t] = cand[j]
-                    prev[t] = j
-                t = n
-                segs = []
-                while t > 0:
-                    s = int(prev[t])
-                    segs.append((s, t))
-                    t = s
-                for s, e in reversed(segs):
-                    rows.append(
-                        (
-                            int(sid),
-                            s,
-                            e - 1,
-                            e - s,
-                            (s1[e] - s1[s]) / (e - s),
-                        )
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            n = len(y)
+            s1 = np.concatenate([[0.0], np.cumsum(y)])
+            s2 = np.concatenate([[0.0], np.cumsum(y * y)])
+            fv = np.empty(n + 1)
+            fv[0] = -beta
+            prev = np.zeros(n + 1, dtype=int)
+            for t in range(1, n + 1):
+                taus = np.arange(t)
+                d1 = s1[t] - s1[taus]
+                d2 = s2[t] - s2[taus]
+                cand = (fv[:t] + (d2 - d1 * d1 / (t - taus))) + beta
+                j = int(np.argmin(cand))
+                fv[t] = cand[j]
+                prev[t] = j
+            t = n
+            segs = []
+            while t > 0:
+                s = int(prev[t])
+                segs.append((s, t))
+                t = s
+            for s, e in reversed(segs):
+                rows.append(
+                    (
+                        int(sid),
+                        s,
+                        e - 1,
+                        e - s,
+                        (s1[e] - s1[s]) / (e - s),
                     )
-            yield pd.DataFrame(
-                rows,
-                columns=["series_id", "seg_start", "seg_end", "n_points", "seg_mean"],
-            )
+                )
+        return pd.DataFrame(
+            rows,
+            columns=["series_id", "seg_start", "seg_end", "n_points", "seg_mean"],
+        )
 
-    return wide.mapInPandas(
-        fn,
+    return generators.series_kernel(
+        df,
+        kernel,
         "series_id bigint, seg_start bigint, seg_end bigint, n_points bigint, seg_mean double",
     )
 
@@ -652,60 +637,53 @@ def pelt_segmentation(df: DataFrame, beta: float = SEG_BETA) -> DataFrame:
     are scanned in ascending tau and the prune keeps ties (<=), so the
     first-argmin backtrace is preserved.
 
-    Execution: kalman-shape mapInPandas; the candidate axis vectorizes in
+    Execution: series_kernel (each series arrives whole and t-sorted);
+    the candidate axis vectorizes in
     numpy per step, the recursion is only over t.
     """
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
-
-    def fn(batches):
+    def kernel(pdf):
         import numpy as np
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                s1 = np.concatenate([[0.0], np.cumsum(y)])
-                s2 = np.concatenate([[0.0], np.cumsum(y * y)])
-                fv = np.empty(n + 1)
-                fv[0] = -beta
-                prev = np.zeros(n + 1, dtype=int)
-                cand_set = np.array([0], dtype=int)  # R_1 = {0}
-                for t in range(1, n + 1):
-                    d1 = s1[t] - s1[cand_set]
-                    sse = (s2[t] - s2[cand_set]) - d1 * d1 / (t - cand_set)
-                    base = fv[cand_set] + sse
-                    cand = base + beta
-                    j = int(np.argmin(cand))  # first argmin (ascending tau)
-                    fv[t] = cand[j]
-                    prev[t] = cand_set[j]
-                    # prune (keep ties), then admit tau = t for the next step
-                    cand_set = np.append(cand_set[base <= fv[t]], t)
-                t = n
-                segs = []
-                while t > 0:
-                    s = int(prev[t])
-                    segs.append((s, t))
-                    t = s
-                for s, e in reversed(segs):
-                    rows.append(
-                        (int(sid), s, e - 1, e - s, (s1[e] - s1[s]) / (e - s))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["series_id", "seg_start", "seg_end", "n_points", "seg_mean"],
-            )
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            n = len(y)
+            s1 = np.concatenate([[0.0], np.cumsum(y)])
+            s2 = np.concatenate([[0.0], np.cumsum(y * y)])
+            fv = np.empty(n + 1)
+            fv[0] = -beta
+            prev = np.zeros(n + 1, dtype=int)
+            cand_set = np.array([0], dtype=int)  # R_1 = {0}
+            for t in range(1, n + 1):
+                d1 = s1[t] - s1[cand_set]
+                sse = (s2[t] - s2[cand_set]) - d1 * d1 / (t - cand_set)
+                base = fv[cand_set] + sse
+                cand = base + beta
+                j = int(np.argmin(cand))  # first argmin (ascending tau)
+                fv[t] = cand[j]
+                prev[t] = cand_set[j]
+                # prune (keep ties), then admit tau = t for the next step
+                cand_set = np.append(cand_set[base <= fv[t]], t)
+            t = n
+            segs = []
+            while t > 0:
+                s = int(prev[t])
+                segs.append((s, t))
+                t = s
+            for s, e in reversed(segs):
+                rows.append(
+                    (int(sid), s, e - 1, e - s, (s1[e] - s1[s]) / (e - s))
+                )
+        return pd.DataFrame(
+            rows,
+            columns=["series_id", "seg_start", "seg_end", "n_points", "seg_mean"],
+        )
 
-    return wide.mapInPandas(
-        fn,
+    return generators.series_kernel(
+        df,
+        kernel,
         "series_id bigint, seg_start bigint, seg_end bigint, n_points bigint, seg_mean double",
     )
 
@@ -781,41 +759,33 @@ def isotonic_fit(df: DataFrame) -> DataFrame:
     float arithmetic is the range mean (s[k+1]−s[j])/(k−j+1) computed from
     the same sequential prefix sums on both engines → bit-identical
     output. O(n²) per series, vectorized in numpy; series are the
-    distributed axis (kalman-shape mapInPandas)."""
+    distributed axis (series_kernel: each series arrives whole and
+    t-sorted)."""
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
-
-    def fn(batches):
+    def kernel(pdf):
         import numpy as np
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                s = np.concatenate([[0.0], np.cumsum(y)])
-                j = np.arange(n)[:, None]
-                k = np.arange(n)[None, :]
-                with np.errstate(invalid="ignore"):
-                    M = (s[k + 1] - s[j]) / (k - j + 1)  # mean(y_j..y_k), j<=k
-                M[j > k] = np.inf  # invalid ranges never win a min
-                smin = np.minimum.accumulate(M[:, ::-1], axis=1)[:, ::-1]
-                # iso_i = max_{j<=i} smin[j, i]; rows j>i masked out of the max
-                sm = np.where(j <= k, smin, -np.inf)
-                iso = np.maximum.accumulate(sm, axis=0).diagonal()
-                for t in range(n):
-                    rows.append((int(sid), t, float(y[t]), float(iso[t])))
-            yield pd.DataFrame(rows, columns=["series_id", "t", "value", "iso"])
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            n = len(y)
+            s = np.concatenate([[0.0], np.cumsum(y)])
+            j = np.arange(n)[:, None]
+            k = np.arange(n)[None, :]
+            with np.errstate(invalid="ignore"):
+                M = (s[k + 1] - s[j]) / (k - j + 1)  # mean(y_j..y_k), j<=k
+            M[j > k] = np.inf  # invalid ranges never win a min
+            smin = np.minimum.accumulate(M[:, ::-1], axis=1)[:, ::-1]
+            # iso_i = max_{j<=i} smin[j, i]; rows j>i masked out of the max
+            sm = np.where(j <= k, smin, -np.inf)
+            iso = np.maximum.accumulate(sm, axis=0).diagonal()
+            for t in range(n):
+                rows.append((int(sid), t, float(y[t]), float(iso[t])))
+        return pd.DataFrame(rows, columns=["series_id", "t", "value", "iso"])
 
-    return wide.mapInPandas(
-        fn, "series_id bigint, t bigint, value double, iso double"
+    return generators.series_kernel(
+        df, kernel, "series_id bigint, t bigint, value double, iso double"
     )
 
 
@@ -868,9 +838,10 @@ def ewma_chart(
     control limits and silence the chart. The out-of-control flag compares the
     6dp-ROUNDED margin on both engines, so a point sitting ulps from the
     limit cannot flip the boolean between Spark and the oracle. Execution:
-    one partial-agged groupBy to buckets, a kalman-shape mapInPandas for
-    the recursion (types are the batch axis), limits as a stateless
-    projection."""
+    one partial-agged groupBy to buckets, one mapInPandas for the
+    recursion over each type's bk-sorted (bk, x) array (types are the batch
+    axis; bk rides along, so this packs two fields and does not use
+    series_kernel), limits as a stateless projection."""
     import pandas as pd
 
     b = ev.groupBy(
@@ -994,7 +965,8 @@ def bocpd(
     hazard — Adams & MacKay eq. 3 scores x_t under the pre-change run in
     both branches — so it carries no signal and is not emitted.)
 
-    Execution: kalman-shape mapInPandas (series = distributed axis; the
+    Execution: series_kernel (each series arrives whole and t-sorted;
+    series = distributed axis; the
     recursion is over t). The kernel is deliberately pure Python with
     SEQUENTIAL folds and fully parenthesized float expressions: the oracle
     replays the identical recursion in a LIST-state recursive CTE, and
@@ -1004,54 +976,46 @@ def bocpd(
     its recursion input instead)."""
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
     omh = 1.0 - hazard
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                y = [float(v) for v in vs]
-                s1 = [0.0]
-                for v in y:
-                    s1.append(s1[-1] + v)
-                p = [1.0]
-                for k, x in enumerate(y):
-                    preds = []
-                    for r in range(k + 1):
-                        S = s1[k] - s1[k - r]
-                        vp = 1.0 / (1.0 / v0 + r / s2)
-                        mu = (mu0 / v0 + S / s2) * vp
-                        pv = vp + s2
-                        preds.append(
-                            math.exp(-((x - mu) * (x - mu)) / (2.0 * pv))
-                            / math.sqrt((2.0 * math.pi) * pv)
-                        )
-                    acc = 0.0
-                    for r in range(k + 1):
-                        acc = acc + p[r] * preds[r]
-                    cp = acc * hazard
-                    newp_raw = [cp] + [p[r] * preds[r] * omh for r in range(k + 1)]
-                    tot = 0.0
-                    for v in newp_raw:
-                        tot = tot + v
-                    p = [v / tot for v in newp_raw]
-                    e = 0.0
-                    for r in range(len(p)):
-                        e = e + r * p[r]
-                    rows.append((int(sid), k, p.index(max(p)), e))
-            yield pd.DataFrame(
-                rows, columns=["series_id", "t", "map_runlen", "e_runlen"]
-            )
+    def kernel(pdf):
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            y = [float(v) for v in vs]
+            s1 = [0.0]
+            for v in y:
+                s1.append(s1[-1] + v)
+            p = [1.0]
+            for k, x in enumerate(y):
+                preds = []
+                for r in range(k + 1):
+                    S = s1[k] - s1[k - r]
+                    vp = 1.0 / (1.0 / v0 + r / s2)
+                    mu = (mu0 / v0 + S / s2) * vp
+                    pv = vp + s2
+                    preds.append(
+                        math.exp(-((x - mu) * (x - mu)) / (2.0 * pv))
+                        / math.sqrt((2.0 * math.pi) * pv)
+                    )
+                acc = 0.0
+                for r in range(k + 1):
+                    acc = acc + p[r] * preds[r]
+                cp = acc * hazard
+                newp_raw = [cp] + [p[r] * preds[r] * omh for r in range(k + 1)]
+                tot = 0.0
+                for v in newp_raw:
+                    tot = tot + v
+                p = [v / tot for v in newp_raw]
+                e = 0.0
+                for r in range(len(p)):
+                    e = e + r * p[r]
+                rows.append((int(sid), k, p.index(max(p)), e))
+        return pd.DataFrame(
+            rows, columns=["series_id", "t", "map_runlen", "e_runlen"]
+        )
 
-    return wide.mapInPandas(
-        fn, "series_id bigint, t bigint, map_runlen bigint, e_runlen double"
+    return generators.series_kernel(
+        df, kernel, "series_id bigint, t bigint, map_runlen bigint, e_runlen double"
     )
 
 
@@ -1128,44 +1092,35 @@ def ssa_spectrum(df: DataFrame, window: int = SSA_WINDOW, top: int = SSA_TOP) ->
     is rows-only (driver) with property tests: values non-increasing,
     Σσ² = ‖X‖²_F (Frobenius identity), tone-vs-noise separation.
 
-    Execution: kalman-shape mapInPandas — series are the Arrow-batch axis;
+    Execution: series_kernel — each series arrives whole and t-sorted, and
+    series are the Arrow-batch axis;
     each kernel SVDs its own L×K matrix (L=window bounded, cost per series
     O(L²K))."""
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(F.array_sort(F.collect_list(F.struct("t", F.col("value").alias("v")))).alias("pts"))
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
-
-    def fn(batches):
+    def kernel(pdf):
         import numpy as np
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sid, vs in zip(pdf["series_id"], pdf["vs"]):
-                y = np.asarray(vs, dtype=float)
-                n = len(y)
-                L = min(window, n // 2)
-                K = n - L + 1
-                X = np.lib.stride_tricks.sliding_window_view(y, L)[:K].T  # L x K
-                s = np.linalg.svd(X, compute_uv=False)
-                tot = float((s * s).sum())
-                cum = 0.0
-                for i in range(min(top, len(s))):
-                    share = float(s[i] * s[i]) / tot
-                    cum += share
-                    rows.append((int(sid), i + 1, float(s[i]), share, cum))
-            yield pd.DataFrame(
-                rows, columns=["series_id", "comp", "sv", "sv_share", "cum_share"]
-            )
+        rows = []
+        for sid, vs in zip(pdf["series_id"], pdf["vs"]):
+            y = np.asarray(vs, dtype=float)
+            n = len(y)
+            L = min(window, n // 2)
+            K = n - L + 1
+            X = np.lib.stride_tricks.sliding_window_view(y, L)[:K].T  # L x K
+            s = np.linalg.svd(X, compute_uv=False)
+            tot = float((s * s).sum())
+            cum = 0.0
+            for i in range(min(top, len(s))):
+                share = float(s[i] * s[i]) / tot
+                cum += share
+                rows.append((int(sid), i + 1, float(s[i]), share, cum))
+        return pd.DataFrame(
+            rows, columns=["series_id", "comp", "sv", "sv_share", "cum_share"]
+        )
 
-    return wide.mapInPandas(
-        fn,
-        "series_id bigint, comp bigint, sv double, sv_share double, cum_share double",
+    return generators.series_kernel(
+        df, kernel, "series_id bigint, comp bigint, sv double, sv_share double, cum_share double"
     )
 
 
@@ -2400,20 +2355,13 @@ def ssa_power(df: DataFrame, window: int = SSAP_WINDOW, k: int = SSAP_K,
     eigensolve is not). Emits eigenvalue (sigma^2) and energy share of
     the total trace per component.
 
-    Execution: kalman-shape applyInPandas, series as the group axis; the
-    oracle replays each chain in a per-series LIST-state recursive CTE."""
+    Execution: applyInPandas over the to_wide pack (one row, hence one
+    group, per t-sorted series); the oracle replays each chain in a
+    per-series LIST-state recursive CTE."""
     import numpy as np
     import pandas as pd
 
-    wide = (
-        df.groupBy("series_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("t", F.col("value").alias("v")))
-            ).alias("pts")
-        )
-        .select("series_id", F.col("pts.v").alias("vs"))
-    )
+    wide = generators.to_wide(df)
 
     schema = "series_id long, component long, sigma2 double, energy_share double"
 

@@ -20,6 +20,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .generators import to_wide
+
 
 def _to_double(col: str) -> F.Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
@@ -3100,13 +3102,8 @@ def abtt_recall(
     t = ep.select("vec_id", "i", "x", "m", *[f"v{j + 1}" for j in range(d)], *pcols).select(
         "vec_id", "i", F.expr(f"x - m - ({removed})").alias("y")
     )
-    tvec = (
-        t.groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("i", "y"))).alias("_pts"))
-        .select("vec_id", F.col("_pts.y").alias("tv"))
-        # pin the transformed corpus: both sides of its top-k read it
-        .localCheckpoint(eager=False)
-    )
+    # pin the transformed corpus: both sides of its top-k read it
+    tvec = to_wide(t, ["vec_id"], "y", order="i").localCheckpoint(eager=False)
 
     def topk6(space: DataFrame, vcol: str) -> DataFrame:
         v = with_norm(space, vcol)
@@ -3139,7 +3136,7 @@ def abtt_recall(
 
     raw = topk6(df.select("vec_id", vec), vec)
     # n_queries*k rows, read twice (overlap join + mean-sim agg)
-    ab = topk6(tvec, "tv").localCheckpoint(eager=False)
+    ab = topk6(tvec, "vs").localCheckpoint(eager=False)
     ov = (
         raw.join(
             ab.select(
