@@ -4,8 +4,10 @@ Cheap tests that catch whole classes of bookkeeping mistakes before a
 driver round does: a bench suite entry referring to a renamed registry
 query (the r10 dedup_incremental shadowing lesson), an oracle SQL
 string that no longer parses after an edit (the full sweep would catch
-it too, but this runs in seconds inside pytest), or a series packed for a
-pandas kernel by hand instead of through generators.to_wide.
+it too, but this runs in seconds inside pytest), a series packed for a
+pandas kernel by hand instead of through generators.to_wide, or a query
+name registered twice (the later import silently replaces the earlier
+entry, so its code never runs).
 """
 from __future__ import annotations
 
@@ -97,3 +99,26 @@ def inline_series_packs(pkg: Path) -> list[str]:
 def test_series_packs_go_through_to_wide():
     found = inline_series_packs(ROOT / "tsgen")
     assert not found, f"pack series with generators.to_wide / series_kernel: {found}"
+
+
+# Query("<name>", ...) and register("<name>", ...): every literal
+# registration site in the package
+_REGISTRATION = re.compile(r'(?:Query|register)\(\s*"(\w+)"')
+
+
+def registrations(pkg: Path) -> dict[str, list[str]]:
+    """Registered query name -> the `file:line` of each registration."""
+    sites: dict[str, list[str]] = {}
+    for path in sorted(pkg.glob("*.py")):
+        text = path.read_text()
+        for m in _REGISTRATION.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            sites.setdefault(m.group(1), []).append(f"{path.name}:{line}")
+    return sites
+
+
+def test_no_query_name_registered_twice():
+    sites = registrations(ROOT / "tsgen")
+    assert len(sites) > 400  # the scan sees the registry, not a stub
+    dups = {name: where for name, where in sites.items() if len(where) > 1}
+    assert not dups, f"query names registered more than once: {dups}"

@@ -66,9 +66,11 @@ def test_qsample_t0_near_identity(spark):
 
 
 def test_sample_fused_equals_driver_loop(spark):
-    # the fused single-pass loop must reproduce the driver-loop sampler
-    # (identical LCG noise; fp association in the trend projection differs
-    # at ~1e-13, amplified slightly over steps)
+    # the fused single-pass loop must reproduce the driver-loop sampler:
+    # identical LCG noise and the same denoising kernel (decompose._denoise);
+    # the posterior step and the Gaussian draw are numpy in the fused form
+    # and Spark SQL in the loop, which can differ in the last ulp,
+    # amplified slightly over steps
     a = (
         diffusion.sample(spark, 4, 32, timesteps=6, checkpoint_every=3)
         .toPandas()

@@ -15,10 +15,13 @@ model approximates this; the engine computes the closed-form analogs:
 - seasonality: FFT top-k of the detrended signal, one applyInPandas pass.
 - residual: remainder (G7).
 
-`decompose` runs trend+seasonality+residual in ONE applyInPandas pass
-(single shuffle on series_id) — the fast path used by the sampling loop.
+`decompose` runs trend+seasonality+residual in ONE mapInPandas pass
+(single shuffle on series_id) through `_denoise`, the matrix denoiser that
+the fused reverse-diffusion samplers in diffusion.py share.
 """
 from __future__ import annotations
+
+from functools import lru_cache
 
 import numpy as np
 import pandas as pd
@@ -36,10 +39,34 @@ def _poly_design(n: int, degree: int) -> np.ndarray:
     return np.vander(c, degree + 1, increasing=True)
 
 
-def _fit_trend(x: np.ndarray, degree: int) -> np.ndarray:
-    A = _poly_design(len(x), degree)
-    coef, *_ = np.linalg.lstsq(A, x, rcond=None)
-    return A @ coef
+@lru_cache(maxsize=64)
+def _design_pinv(n: int, degree: int) -> tuple[np.ndarray, np.ndarray]:
+    """Design matrix and its pseudo-inverse per series length; read-only,
+    since every caller shares the cached arrays."""
+    A = _poly_design(n, degree)
+    Ainv = np.linalg.pinv(A)
+    A.setflags(write=False)
+    Ainv.setflags(write=False)
+    return A, Ainv
+
+
+def _denoise(X: np.ndarray, degree: int, top_k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(trend, seasonality) of each row of the (m, n) matrix X of
+    equal-length series: least-squares polynomial trend, then the top-k
+    rfft modes of the detrended rows. x̂₀ = trend + seasonality is the
+    decomposition denoiser (diffusion_ts_model.py:538-554); `decompose` and
+    the fused samplers in diffusion.py all run this one kernel."""
+    n = X.shape[1]
+    A, Ainv = _design_pinv(n, degree)
+    trend = (A @ (Ainv @ X.T)).T
+    spec = np.fft.rfft(X - trend, axis=1)
+    mag = np.abs(spec)
+    kk = min(top_k, spec.shape[1])
+    # per-row top-k mask (vectorized argpartition)
+    idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
+    mask = np.zeros_like(mag)
+    np.put_along_axis(mask, idx, 1.0, axis=1)
+    return trend, np.fft.irfft(spec * mask, n=n, axis=1)
 
 
 def decompose(
@@ -59,10 +86,9 @@ def decompose(
 
     Physical plan: ONE shuffle (groupBy collect_list to wide form), then a
     narrow mapInPandas that processes a whole Arrow batch of series at once —
-    equal-length series are stacked into an (n_series, seq_len) matrix so the
-    polynomial fit is a single pinv matmul and the FFT a single
-    np.fft.rfft(axis=1). ~10-100x less Python/pandas overhead than the
-    per-group applyInPandas form (kept below as decompose_grouped).
+    equal-length series are stacked into an (n_series, seq_len) matrix for
+    `_denoise`, so the polynomial fit is a single pinv matmul and the FFT a
+    single np.fft.rfft(axis=1) instead of one pandas call per series.
     """
     from collections.abc import Iterator
 
@@ -76,7 +102,6 @@ def decompose(
     # list<double> columns, so stacking below is pure numpy (no dict walks)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pinv_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -85,20 +110,7 @@ def decompose(
                 sub = pdf[lengths == n]
                 X = np.stack(sub["vs"].to_numpy())
                 T = np.stack(sub["ts"].to_numpy())
-                if n not in pinv_cache:
-                    A = _poly_design(int(n), degree)
-                    pinv_cache[int(n)] = (A, np.linalg.pinv(A))
-                A, Ainv = pinv_cache[int(n)]
-                trend = (A @ (Ainv @ X.T)).T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                kk = min(top_k, spec.shape[1])
-                mag = np.abs(spec)
-                # per-row top-k mask (vectorized argpartition)
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                seas = np.fft.irfft(spec * mask, n=int(n), axis=1)
+                trend, seas = _denoise(X, degree, top_k)
                 yield pd.DataFrame(
                     {
                         **{k: np.repeat(sub[k].to_numpy(), n) for k in keys},
@@ -111,37 +123,6 @@ def decompose(
                 )
 
     return wide.mapInPandas(fn, schema)
-
-
-def decompose_grouped(
-    df: DataFrame,
-    degree: int = DEFAULT_DEGREE,
-    top_k: int = DEFAULT_TOP_K,
-    value_col: str = "value",
-    key: str = "series_id",
-) -> DataFrame:
-    """Per-group reference implementation (one pandas call per series)."""
-    schema = f"{key} bigint, t bigint, {value_col} double, trend double, seasonality double, residual double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        x = pdf[value_col].to_numpy()
-        trend = _fit_trend(x, degree)
-        det = x - trend
-        spec = np.fft.rfft(det)
-        seas = np.fft.irfft(spec * topk_filter_mask(spec, top_k), n=len(x))
-        return pd.DataFrame(
-            {
-                key: pdf[key].iloc[0],
-                "t": pdf["t"].to_numpy(),
-                value_col: x,
-                "trend": trend,
-                "seasonality": seas,
-                "residual": x - trend - seas,
-            }
-        )
-
-    return df.select(key, "t", value_col).groupBy(key).applyInPandas(fn, schema)
 
 
 def extract_seasonality(
@@ -195,16 +176,10 @@ def quad_trend_sql_exprs() -> dict[str, str]:
     A = [[m0,m1,m2],[m1,m2,m3],[m2,m3,m4]], rhs = [b0,b1,b2];
     c_i = det(A with column i replaced by rhs) / det(A).
     """
-
-    def det3(a, b, c, d, e, f, g, h, i):
-        return (
-            f"({a}*({e}*{i} - {f}*{h}) - {b}*({d}*{i} - {f}*{g}) + {c}*({d}*{h} - {e}*{g}))"
-        )
-
-    D = det3("m0", "m1", "m2", "m1", "m2", "m3", "m2", "m3", "m4")
-    D0 = det3("b0", "m1", "m2", "b1", "m2", "m3", "b2", "m3", "m4")
-    D1 = det3("m0", "b0", "m2", "m1", "b1", "m3", "m2", "b2", "m4")
-    D2 = det3("m0", "m1", "b0", "m1", "m2", "b1", "m2", "m3", "b2")
+    D = det3_expr("m0", "m1", "m2", "m1", "m2", "m3", "m2", "m3", "m4")
+    D0 = det3_expr("b0", "m1", "m2", "b1", "m2", "m3", "b2", "m3", "m4")
+    D1 = det3_expr("m0", "b0", "m2", "m1", "b1", "m3", "m2", "b2", "m4")
+    D2 = det3_expr("m0", "m1", "b0", "m1", "m2", "b1", "m2", "m3", "b2")
     return {"det": D, "c0": f"({D0} / {D})", "c1": f"({D1} / {D})", "c2": f"({D2} / {D})"}
 
 
@@ -276,6 +251,15 @@ def cubic_trend_sql_exprs() -> dict[str, str]:
     return cramer4_exprs(A, ["b0", "b1", "b2", "b3"])
 
 
+def cubic_moment_sql(value: str = "value") -> list[str]:
+    """The aggregate select-list cubic_trend_sql_exprs reads: m0..m6 = Σ cc^i
+    and b0..b3 = Σ cc^i·value over a column cc = t/n — shared text for both
+    engines."""
+    ms = [f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7)]
+    bs = [f"sum({'*'.join(['cc'] * i + [value])}) AS b{i}" for i in range(4)]
+    return ["CAST(count(*) AS DOUBLE) AS m0", *ms, *bs]
+
+
 # per-point cubic evaluation — SHARED text (identical parse tree both engines)
 CUBIC_EVAL = "(c0 + c1*cc + c2*(cc*cc) + c3*(cc*cc*cc))"
 
@@ -288,13 +272,7 @@ def trend_cubic(df: DataFrame, value_col: str = "value", key: str = "series_id")
     j = df.withColumn(
         "_n", F.count("*").over(Window.partitionBy(key))
     ).withColumn("cc", F.col("t").cast("double") / F.col("_n"))
-    aggs = [F.expr("CAST(count(*) AS DOUBLE)").alias("m0")]
-    for i in range(1, 7):
-        aggs.append(F.expr("sum(" + "*".join(["cc"] * i) + ")").alias(f"m{i}"))
-    for i in range(4):
-        prod = "*".join(["cc"] * i + [value_col]) if i else value_col
-        aggs.append(F.expr(f"sum({prod})").alias(f"b{i}"))
-    g = j.groupBy(key).agg(*aggs)
+    g = j.groupBy(key).agg(*[F.expr(a) for a in cubic_moment_sql(value_col)])
     e = cubic_trend_sql_exprs()
     return g.select(key, *[F.expr(e[f"c{i}"]).alias(f"c{i}") for i in range(4)])
 

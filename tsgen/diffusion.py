@@ -12,15 +12,20 @@ Scale design:
   reproducible regardless of partitioning/retries.
 - The reverse loop (I1) is driver-sequential by nature (T data-dependent
   steps); lineage is cut with localCheckpoint every `checkpoint_every`
-  iterations to keep plans bounded (SURVEY §4).
+  iterations to keep plans bounded (SURVEY §4). The fused samplers
+  (`sample_fused` and its conditional variants) instead run the whole loop
+  per batch of series in one mapInPandas pass (`_fused_frame`).
 """
 from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import expr as E
+from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _denoise
 from .schedules import schedule_table
 
 SALT_TSTEP = 31
@@ -185,97 +190,19 @@ def _np_lcg3(key, salt: int):
     return h
 
 
-def _np_normal(key, salt: int):
-    import numpy as np
-
-    u1 = _np_lcg3(key, salt) / E.M31
-    u2 = _np_lcg3(key, salt + 7919) / E.M31
-    return np.sqrt(-2.0 * np.log(1.0 - u1)) * np.cos(E.TWO_PI * u2)
-
-
-def sample_fused(
-    spark: SparkSession,
-    n_series: int,
-    seq_len: int,
-    timesteps: int = 50,
-    kind: str = "cosine",
-    degree: int | None = None,
-    top_k: int | None = None,
-) -> DataFrame:
-    """Reverse diffusion with the WHOLE T-step loop fused into one
-    mapInPandas pass.
-
-    Key insight: each series evolves independently (the denoiser and the
-    posterior step are per-series; noise is a pure function of
-    (series_id, t, step)), so the loop needs NO cross-series communication —
-    the driver-loop form (`sample`) pays T shuffles purely for Spark's
-    iteration mechanics. Fusing yields identical values (the numpy LCG is an
-    exact integer replica of the SQL one; asserted in tests) with exactly
-    ONE narrow pass: Range → mapInPandas. At T=500 (config.json:16) this is
-    the difference between 500 scheduled jobs and one.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
-
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                x0 = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    noise = _np_normal(keys, step_salt(SALT_PNOISE, t))
-                    X = mean + row["posterior_variance"] ** 0.5 * noise
-                else:
-                    X = x0
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "t": np.tile(ts, m),
-                    "x": X.reshape(-1),
-                }
-            )
-
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, t bigint, x double")
-
-
 def _np_u01(key, salt: int):
     return _np_lcg3(key, salt) / E.M31
+
+
+def _np_normal(key, salt: int):
+    u1 = _np_u01(key, salt)
+    u2 = _np_u01(key, salt + 7919)
+    return np.sqrt(-2.0 * np.log(1.0 - u1)) * np.cos(E.TWO_PI * u2)
 
 
 def _np_signal(family: str, sids, seq_len: int, lambda_decay: float = 0.5):
     """numpy replica of expr.signal_expr(family, seq_len) (libm-identical
     up to 1 ulp). sids: int64 array of series ids → (len(sids), seq_len)."""
-    import numpy as np
 
     def u(salt, lo, hi):
         return (lo + (hi - lo) * _np_u01(sids, salt))[:, None]
@@ -296,8 +223,89 @@ def _np_signal(family: str, sids, seq_len: int, lambda_decay: float = 0.5):
     raise ValueError(f"unknown family: {family}")
 
 
-def _np_mixed_signal(sids, seq_len: int):
-    return _np_signal("mixed", sids, seq_len)
+def _schedule_rows(spark: SparkSession, timesteps: int, kind: str) -> dict[int, dict]:
+    return {r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()}
+
+
+def _x0_hat(X: np.ndarray) -> np.ndarray:
+    """Decomposition-denoiser estimate x̂₀ = trend + seasonality of each row."""
+    trend, seas = _denoise(X, DEFAULT_DEGREE, DEFAULT_TOP_K)
+    return trend + seas
+
+
+def _np_p_step(X: np.ndarray, x0: np.ndarray, row: dict, keys, t: int) -> np.ndarray:
+    """numpy p_sample_step: x_{t−1} from schedule row `row` of step t, with
+    the posterior noise drawn at (keys, t); x̂₀ itself at t = 0."""
+    if t == 0:
+        return x0
+    mean = (
+        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
+        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
+    ) / (1.0 - row["alpha_cumprod"])
+    return mean + row["posterior_variance"] ** 0.5 * _np_normal(keys, step_salt(SALT_PNOISE, t))
+
+
+def _fused_frame(
+    spark: SparkSession,
+    n_series: int,
+    seq_len: int,
+    kernel: Callable[[np.ndarray, np.ndarray, np.ndarray], dict[str, np.ndarray]],
+    schema: str,
+) -> DataFrame:
+    """The fused samplers' one narrow pass, Range → mapInPandas.
+
+    Per Arrow batch, `kernel(sids, keys, ts)` runs a sampler's whole T-step
+    loop on the batch's series as an (m, seq_len) matrix (`keys` = the
+    pt_key of every point) and returns its output columns, each
+    broadcastable to (m, seq_len); series_id and t are added here.
+
+    Invariant that makes this valid: series evolve independently (the
+    denoiser and the posterior step are per-series) and noise is a pure
+    function of (series_id, t, step), with the numpy LCG an exact integer
+    replica of the SQL one. So a fused sampler reproduces its driver-loop
+    form (`sample`, `sample_conditional`; asserted in tests) in one job
+    instead of one per step: at T=500 (config.json:16), one against 500.
+    """
+    ts = np.arange(seq_len, dtype=np.int64)
+
+    def fn(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            sids = pdf["series_id"].to_numpy()
+            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
+            shape = (len(sids), seq_len)
+            cols = kernel(sids, keys, ts)
+            yield pd.DataFrame(
+                {
+                    "series_id": np.repeat(sids, seq_len),
+                    "t": np.tile(ts, len(sids)),
+                    **{k: np.broadcast_to(v, shape).reshape(-1) for k, v in cols.items()},
+                }
+            )
+
+    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
+    return grid.mapInPandas(fn, schema)
+
+
+def sample_fused(
+    spark: SparkSession,
+    n_series: int,
+    seq_len: int,
+    timesteps: int = 50,
+    kind: str = "cosine",
+) -> DataFrame:
+    """`sample` with the decomposition denoiser, the whole T-step loop fused
+    into one _fused_frame pass."""
+    sched = _schedule_rows(spark, timesteps, kind)
+
+    def kernel(sids, keys, ts):
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            X = _np_p_step(X, _x0_hat(X), sched[t], keys, t)
+        return {"x": X}
+
+    return _fused_frame(spark, n_series, seq_len, kernel, "series_id bigint, t bigint, x double")
 
 
 def sample_conditional_fused(
@@ -307,73 +315,31 @@ def sample_conditional_fused(
     timesteps: int = 10,
     history_len: int = 16,
     kind: str = "cosine",
-    degree: int | None = None,
-    top_k: int | None = None,
 ) -> DataFrame:
     """Fused form of sample_conditional: the whole forecast-conditioned
-    reverse-diffusion loop in one mapInPandas pass (same independence
-    argument as sample_fused; equivalence tested)."""
-    import numpy as np
-    import pandas as pd
+    reverse-diffusion loop in one _fused_frame pass."""
+    sched = _schedule_rows(spark, timesteps, kind)
 
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
+    def kernel(sids, keys, ts):
+        observed = ts < history_len
+        known = _np_signal("mixed", sids, seq_len)
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            X = _np_p_step(X, _x0_hat(X), sched[t], keys, t)
+            if t > 0:
+                # re-impose observed history, noised to the current level
+                prev = sched[t - 1]
+                level = prev["sqrt_ac"] * known + prev["sqrt_1m_ac"] * _np_normal(
+                    keys, step_salt(SALT_QNOISE, t)
+                )
+                X = np.where(observed, level, X)
+            else:
+                X = np.where(observed, known, X)
+        return {"observed": observed, "x": X}
 
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            observed = ts[None, :] < history_len
-            known = _np_mixed_signal(sids, seq_len)
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                x0 = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    X = mean + row["posterior_variance"] ** 0.5 * _np_normal(
-                        keys, step_salt(SALT_PNOISE, t)
-                    )
-                    prev = sched[t - 1]
-                    noised_known = prev["sqrt_ac"] * known + prev["sqrt_1m_ac"] * _np_normal(
-                        keys, step_salt(SALT_QNOISE, t)
-                    )
-                    X = np.where(observed, noised_known, X)
-                else:
-                    X = np.where(observed, known, x0)
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "t": np.tile(ts, m),
-                    "observed": np.tile(observed[0], m),
-                    "x": X.reshape(-1),
-                }
-            )
-
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, t bigint, observed boolean, x double")
+    return _fused_frame(
+        spark, n_series, seq_len, kernel, "series_id bigint, t bigint, observed boolean, x double"
+    )
 
 
 def sample_conditional(
@@ -430,10 +396,7 @@ def sample_conditional_label(
     seq_len: int,
     timesteps: int = 10,
     kind: str = "cosine",
-    families: tuple[str, ...] = ("sine", "cosine", "mixed", "exponential_decay"),
     guidance: float = 1.0,
-    degree: int | None = None,
-    top_k: int | None = None,
 ) -> DataFrame:
     """Label-conditional reverse diffusion with classifier-free-guidance-style
     blending — the deterministic analog of the reference's class-conditioned
@@ -449,73 +412,29 @@ def sample_conditional_label(
     `cond` is the labeled family's clean signal (what the class-conditioned
     model predicts in the w→∞ limit), and w=`guidance` (0 → unconditional,
     1 → fully conditioned, >1 extrapolates as in CFG). Fused: the whole
-    T-step loop runs in one mapInPandas pass (same per-series independence
-    argument as sample_fused).
+    T-step loop runs in one _fused_frame pass.
 
     → (series_id, label, t, x); with guidance=1 the t=0 replace makes the
     final x exactly the labeled family signal (property-tested).
     """
-    import numpy as np
-    import pandas as pd
+    sched = _schedule_rows(spark, timesteps, kind)
+    n_fam = len(E.LABEL_FAMILIES)
 
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
+    def kernel(sids, keys, ts):
+        labels = np.floor(_np_u01(sids, E.SALT_LABEL) * n_fam).astype(np.int64)
+        # per-label family dispatch: evaluate each family's signal for the
+        # batch, select rows by label (n_fam small → negligible overhead)
+        cond = np.zeros(keys.shape)
+        for li, fam in enumerate(E.LABEL_FAMILIES):
+            sel = labels == li
+            if sel.any():
+                cond[sel] = _np_signal(fam, sids[sel], seq_len)
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            uncond = _x0_hat(X)
+            X = _np_p_step(X, uncond + guidance * (cond - uncond), sched[t], keys, t)
+        return {"label": labels[:, None], "x": X}
 
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
-    n_fam = len(families)
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            labels = np.floor(_np_u01(sids, E.SALT_LABEL) * n_fam).astype(np.int64)
-            # per-label family dispatch: evaluate each family's signal for the
-            # batch, select rows by label (n_fam small → negligible overhead)
-            cond = np.zeros((m, seq_len))
-            for li, fam in enumerate(families):
-                sel = labels == li
-                if sel.any():
-                    cond[sel] = _np_signal(fam, sids[sel], seq_len)
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                uncond = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                x0 = uncond + guidance * (cond - uncond)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    X = mean + row["posterior_variance"] ** 0.5 * _np_normal(
-                        keys, step_salt(SALT_PNOISE, t)
-                    )
-                else:
-                    X = x0
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "label": np.repeat(labels, seq_len),
-                    "t": np.tile(ts, m),
-                    "x": X.reshape(-1),
-                }
-            )
-
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, label bigint, t bigint, x double")
+    return _fused_frame(
+        spark, n_series, seq_len, kernel, "series_id bigint, label bigint, t bigint, x double"
+    )

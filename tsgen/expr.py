@@ -122,7 +122,9 @@ def series_params(sid: str = "series_id") -> dict[str, str]:
     }
 
 
-FAMILIES = ("sine", "cosine", "mixed", "exponential_decay", "linear_sum", "custom_decay")
+# create_labeled_dataset's classes; label = index into this tuple
+LABEL_FAMILIES = ("sine", "cosine", "mixed", "exponential_decay")
+FAMILIES = (*LABEL_FAMILIES, "linear_sum", "custom_decay")
 
 
 def signal_expr(

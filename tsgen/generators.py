@@ -66,22 +66,21 @@ def generate_labeled(
     spark: SparkSession,
     n_series: int,
     seq_len: int,
-    families: tuple[str, ...] = ("sine", "cosine", "mixed", "exponential_decay"),
     noise: bool = True,
     normalize: bool = True,
 ) -> DataFrame:
     """create_labeled_dataset (utils/data_generators.py:111-147): each series
-    draws a family uniformly; label = index into `families`.
+    draws a family uniformly; label = index into E.LABEL_FAMILIES.
 
     Spark-first: the per-sample family dispatch (reference: a Python loop
     generating one series at a time) becomes a single CASE WHEN over the
     whole grid — one codegen'd pass, no per-series work on the driver.
     """
-    n_fam = len(families)
+    n_fam = len(E.LABEL_FAMILIES)
     label = f"CAST(floor({E.u01('series_id', E.SALT_LABEL)} * {n_fam}) AS BIGINT)"
     cases = " ".join(
         f"WHEN {i} THEN {E.noisy_signal_expr(fam, seq_len) if noise else E.signal_expr(fam, seq_len)}"
-        for i, fam in enumerate(families)
+        for i, fam in enumerate(E.LABEL_FAMILIES)
     )
     df = (
         base_grid(spark, n_series, seq_len)

@@ -44,15 +44,14 @@ def generate_sql(
 def generate_labeled_sql(
     n_series: int,
     seq_len: int,
-    families: tuple[str, ...] = ("sine", "cosine", "mixed", "exponential_decay"),
     noise: bool = True,
     normalize: bool = True,
 ) -> str:
-    n_fam = len(families)
+    n_fam = len(E.LABEL_FAMILIES)
     label = f"CAST(floor({E.u01('series_id', E.SALT_LABEL)} * {n_fam}) AS BIGINT)"
     cases = " ".join(
         f"WHEN {i} THEN {E.noisy_signal_expr(f, seq_len) if noise else E.signal_expr(f, seq_len)}"
-        for i, f in enumerate(families)
+        for i, f in enumerate(E.LABEL_FAMILIES)
     )
     inner = (
         f"SELECT series_id, t, {label} AS label, CASE {label} {cases} END AS value"

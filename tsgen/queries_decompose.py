@@ -16,6 +16,8 @@ from . import expr as E
 from .queries import _REGISTRY, Query, round6, roundn
 
 N_D, LEN_D = 12, 64
+# degree-3 moment select-list of every cubic Cramer trend below
+_MOMENTS = ", ".join(decompose.cubic_moment_sql())
 
 
 def _q_trend_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,17 +60,9 @@ def _trend_poly3_sql() -> str:
     gen = oracle.generate_sql(N_D, LEN_D, "linear_sum", rounded=False)
     e = decompose.cubic_trend_sql_exprs()
     cc = f"CAST(t AS DOUBLE)/{LEN_D}"
-    moments = ", ".join(
-        f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7)
-    )
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     return (
         f"WITH s AS (SELECT series_id, t, value, {cc} AS cc FROM ({gen})), "
-        f"g AS (SELECT series_id, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} "
-        "FROM s GROUP BY series_id), "
+        f"g AS (SELECT series_id, {_MOMENTS} FROM s GROUP BY series_id), "
         f"co AS (SELECT series_id, {e['c0']} AS c0, {e['c1']} AS c1, "
         f"{e['c2']} AS c2, {e['c3']} AS c3 FROM g) "
         f"SELECT s.series_id, s.t, {E.round6(decompose.CUBIC_EVAL)} AS trend "
@@ -174,11 +168,6 @@ def _decompose_chain_sql(gen: str, keys: str, seq_len: int = LEN_D, rounded: boo
     # `keys` is the comma-joined decomposition key ("series_id" or
     # "series_id, channel" for the dim>1 contract)
     e = decompose.cubic_trend_sql_exprs()
-    moments = ", ".join(f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7))
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     w = f"{2 * 3.141592653589793 / seq_len:.17e}"
     nbins = seq_len // 2 + 1
     kl = [x.strip() for x in keys.split(",")]
@@ -189,7 +178,7 @@ def _decompose_chain_sql(gen: str, keys: str, seq_len: int = LEN_D, rounded: boo
     rv = E.round6 if rounded else (lambda x: f"({x})")
     return f"""
 WITH s AS (SELECT {sk}, t, value, CAST(t AS DOUBLE)/{seq_len} AS cc FROM ({gen})),
-g AS (SELECT {sk}, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} FROM s GROUP BY {sk}),
+g AS (SELECT {sk}, {_MOMENTS} FROM s GROUP BY {sk}),
 co AS (SELECT {sk}, {e['c0']} AS c0, {e['c1']} AS c1, {e['c2']} AS c2, {e['c3']} AS c3 FROM g),
 tr AS (
   SELECT {sel_k('s')}, s.t, s.value, {decompose.CUBIC_EVAL} AS trend,
@@ -332,16 +321,11 @@ def _sample_loop_sql(
     from .schedules import duckdb_from_clause, schedule_sql
 
     e = decompose.cubic_trend_sql_exprs()
-    moments = ", ".join(f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7))
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     w = f"{2 * 3.141592653589793 / seq_len:.17e}"
     nbins, nyq = seq_len // 2 + 1, seq_len // 2
     known = E.signal_expr("mixed", seq_len)
     if mode == "label":
-        fams = ("sine", "cosine", "mixed", "exponential_decay")
+        fams = E.LABEL_FAMILIES
         label_of = lambda sid: (  # noqa: E731
             f"CAST(floor({E.u01(sid, E.SALT_LABEL)} * {len(fams)}) AS BIGINT)"
         )
@@ -368,8 +352,7 @@ def _sample_loop_sql(
         p = f"d{t}_"
         ctes += [
             f"{p}s AS MATERIALIZED (SELECT series_id, t, x AS value, CAST(t AS DOUBLE)/{seq_len} AS cc FROM {cur})",
-            f"{p}g AS (SELECT series_id, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} "
-            f"FROM {p}s GROUP BY series_id)",
+            f"{p}g AS (SELECT series_id, {_MOMENTS} FROM {p}s GROUP BY series_id)",
             f"{p}co AS (SELECT series_id, {e['c0']} AS c0, {e['c1']} AS c1, {e['c2']} AS c2, "
             f"{e['c3']} AS c3 FROM {p}g)",
             f"{p}tr AS MATERIALIZED (SELECT s.series_id, s.t, s.value, {decompose.CUBIC_EVAL} AS trend, "

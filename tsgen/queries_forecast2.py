@@ -2,11 +2,6 @@
 the SES/Holt/Holt-Winters/theta/Kalman family in tsgen/forecast.py with the
 remaining M-competition classics):
 
-- forecast_ar2: per-series AR(2) autoregression — OLS fit on the centered
-  series via the 2x2 normal equations (Cramer), then an h-step recursive
-  forecast. Entirely Catalyst: one shuffle fits every series at once; the
-  h-step recurrence is unrolled as nested column expressions over the tiny
-  per-series coefficient table (no driver loop over data).
 - forecast_accuracy: the M-competition benchmark harness — naive /
   seasonal-naive / drift forecasts on a train/test split, scored with
   MAE / RMSE / sMAPE / MASE per (series, method). This is the query a
@@ -20,9 +15,6 @@ remaining M-competition classics):
   window + one aggregation.
 
 Scale notes (100 TB):
-- ar2: the data-sized work is ONE hash partitioning on series_id shared by
-  the window pass and the groupBy (same key -> no second exchange); the
-  recurrence runs over n_series coefficient rows, never over raw points.
 - accuracy: lag window + per-series scalar agg share the series_id
   partitioning; the scalars table (n_series rows) is broadcast back.
 - croston: arrivals filter prunes before the shuffle; the SES closed form
@@ -39,111 +31,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from . import expr as E, generators, oracle
 from .queries import _REGISTRY, Query, roundn
 
-AR2_H = 8
 ACC_TRAIN_N, ACC_SEASON = 48, 16
 CROSTON_ALPHA = 0.3
 CROSTON_SALT = 52121
-
-
-# --- AR(2) -----------------------------------------------------------------
-def ar2_forecast(
-    df: DataFrame,
-    horizon: int = AR2_H,
-    key: str = "series_id",
-    t: str = "t",
-    value: str = "value",
-) -> DataFrame:
-    """Fit y_t - mu = phi1 (y_{t-1} - mu) + phi2 (y_{t-2} - mu) by OLS per
-    series, then forecast `horizon` steps by running the recurrence forward
-    from the last two observations.
-
-    The fit is the 2x2 normal-equation solve (Cramer): sums of lag products
-    are conditional aggregates over one series_id partitioning. The h-step
-    recurrence is unrolled as nested column expressions — expression-tree
-    size grows Fibonacci-like in `horizon`, fine for the small horizons this
-    targets (keep horizon <= ~16)."""
-    wp = Window.partitionBy(key)
-    wo = Window.partitionBy(key).orderBy(t)
-    d = (
-        df.withColumn("mu", F.avg(value).over(wp))
-        .withColumn("t_max", F.max(t).over(wp))
-        .withColumn("c", F.col(value) - F.col("mu"))
-        .withColumn("l1", F.lag(value, 1).over(wo) - F.col("mu"))
-        .withColumn("l2", F.lag(value, 2).over(wo) - F.col("mu"))
-    )
-    ok = F.col("l2").isNotNull()
-    agg = d.groupBy(key).agg(
-        F.max("mu").alias("mu"),
-        F.sum(F.when(ok, F.col("l1") * F.col("l1"))).alias("s11"),
-        F.sum(F.when(ok, F.col("l2") * F.col("l2"))).alias("s22"),
-        F.sum(F.when(ok, F.col("l1") * F.col("l2"))).alias("s12"),
-        F.sum(F.when(ok, F.col("c") * F.col("l1"))).alias("sy1"),
-        F.sum(F.when(ok, F.col("c") * F.col("l2"))).alias("sy2"),
-        F.max(F.when(F.col(t) == F.col("t_max"), F.col("c"))).alias("f1"),
-        F.max(F.when(F.col(t) == F.col("t_max") - 1, F.col("c"))).alias("f2"),
-    )
-    det = F.col("s11") * F.col("s22") - F.col("s12") * F.col("s12")
-    coef = agg.withColumn(
-        "phi1", (F.col("sy1") * F.col("s22") - F.col("sy2") * F.col("s12")) / det
-    ).withColumn(
-        "phi2", (F.col("s11") * F.col("sy2") - F.col("s12") * F.col("sy1")) / det
-    )
-    f_prev2, f_prev1 = F.col("f2"), F.col("f1")
-    steps = []
-    for _ in range(horizon):
-        f_new = F.col("phi1") * f_prev1 + F.col("phi2") * f_prev2
-        steps.append(f_new + F.col("mu"))
-        f_prev2, f_prev1 = f_prev1, f_new
-    out = coef.select(
-        key, "phi1", "phi2", F.posexplode(F.array(*steps)).alias("h0", "forecast")
-    )
-    return out.select(
-        key, (F.col("h0") + 1).alias("h"), "forecast", "phi1", "phi2"
-    )
-
-
-def _q_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = generators.generate(spark, 8, 64, "mixed")
-    return roundn(ar2_forecast(df), 6, "forecast", "phi1", "phi2")
-
-
-def _ar2_sql(horizon: int = AR2_H) -> str:
-    gen = oracle.generate_sql(8, 64, "mixed", rounded=False)
-    return f"""
-WITH RECURSIVE src AS ({gen}),
-d AS (
-  SELECT series_id, t, value,
-         avg(value) OVER (PARTITION BY series_id) AS mu,
-         max(t) OVER (PARTITION BY series_id) AS t_max,
-         lag(value, 1) OVER wa AS p1,
-         lag(value, 2) OVER wa AS p2
-  FROM src WINDOW wa AS (PARTITION BY series_id ORDER BY t)),
-coef0 AS (
-  SELECT series_id, max(mu) AS mu,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p1 - mu) * (p1 - mu) END) AS s11,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p2 - mu) * (p2 - mu) END) AS s22,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p1 - mu) * (p2 - mu) END) AS s12,
-         sum(CASE WHEN p2 IS NOT NULL THEN (value - mu) * (p1 - mu) END) AS sy1,
-         sum(CASE WHEN p2 IS NOT NULL THEN (value - mu) * (p2 - mu) END) AS sy2,
-         max(CASE WHEN t = t_max THEN value - mu END) AS f1,
-         max(CASE WHEN t = t_max - 1 THEN value - mu END) AS f2
-  FROM d GROUP BY series_id),
-coef AS (
-  SELECT series_id, mu, f1, f2,
-         (sy1 * s22 - sy2 * s12) / (s11 * s22 - s12 * s12) AS phi1,
-         (s11 * sy2 - s12 * sy1) / (s11 * s22 - s12 * s12) AS phi2
-  FROM coef0),
-rec AS (
-  SELECT series_id, 1 AS h, phi1 * f1 + phi2 * f2 AS f, f1 AS fp,
-         mu, phi1, phi2
-  FROM coef
-  UNION ALL
-  SELECT series_id, h + 1, phi1 * f + phi2 * fp, f, mu, phi1, phi2
-  FROM rec WHERE h < {horizon})
-SELECT series_id, h, {E.round6('f + mu')} AS forecast,
-       {E.round6('phi1')} AS phi1, {E.round6('phi2')} AS phi2
-FROM rec
-"""
 
 
 # --- benchmark accuracy harness -------------------------------------------
@@ -506,7 +396,6 @@ FROM tot CROSS JOIN bu
 
 _REGISTRY.update(
     {
-        "forecast_ar2": Query("forecast_ar2", _q_ar2, _ar2_sql(), ("forecast",)),
         "forecast_accuracy": Query(
             "forecast_accuracy", _q_accuracy, _accuracy_sql(), ("forecast",)
         ),
