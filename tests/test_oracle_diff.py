@@ -2,8 +2,11 @@
 DuckDB twin, with the same exact compare tools/check_oracle.py applies.
 
 The full sweep (`python tools/check_oracle.py <sf_dir>`) runs every query
-and takes minutes; this runs the decomposition and reverse-diffusion
-queries, whose kernels are shared, on every test run.
+and takes minutes; this runs, on every test run, the queries built on
+shared kernels: decomposition and reverse diffusion (one denoiser), the
+graph loops (one edge symmetrization, power iteration and BFS frontier),
+the IRLS GLMs, the deflated power iteration and the driver-pinned Lloyd
+centroid mean.
 """
 from __future__ import annotations
 
@@ -27,6 +30,26 @@ QUERIES = (
     "sample_fused",
     "sample_forecast",
     "sample_conditional_label",
+    "graph_pagerank",
+    "graph_ppr",
+    "graph_bfs",
+    "graph_closeness",
+    "graph_communities",
+    "graph_modularity",
+    "ev_logreg",
+    "ev_poisson_glm",
+    "ev_hazard_glm",
+    "embed_top_eigen",
+    "embed_pca_power",
+    "embed_abtt",
+    "embed_abtt_recall",
+    "ann_ivf",
+    "ann_ivf_recall",
+    "ann_ivf_frontier",
+    "ann_ivfpq_recall",
+    "ivf_cell_profile",
+    "embed_kmeans",
+    "embed_cluster_purity",
 )
 
 

@@ -395,14 +395,21 @@ GROUP BY e.event_type
 
 
 # --- triangle count / clustering coefficient -------------------------------
-def triangle_stats(edges: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+def _edges(edges: DataFrame) -> DataFrame:
+    """Distinct (u, v) pairs of a doc_a/doc_b pair list, lazily pinned:
+    every caller reads them more than once."""
+    return edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).distinct().localCheckpoint(
+        eager=False
+    )
+
+
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle count + clustering coefficient over an undirected
     edge list (a < b). Wedges from E⋈E (join on the middle vertex), closed
     by a semi-join back to E; wedge count per node from the degree table.
     Max degree is bounded by the pair generator's df-cap, which bounds the
     E⋈E fan-out — the standard scalable triangle-count shape."""
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
-    e = e.localCheckpoint(eager=False)
+    e = _edges(edges)
     # wedges u<v<w centered anywhere: join (u,v) with (v,w)
     w1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     w2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
@@ -466,42 +473,31 @@ FROM s CROSS JOIN ec CROSS JOIN tri
 PR_DAMP, PR_ITER = 0.85, 8
 
 
-def pagerank(
-    edges: DataFrame, a: str = "doc_a", b: str = "doc_b",
-    damping: float = PR_DAMP, n_iter: int = PR_ITER,
-) -> DataFrame:
-    """PageRank on an undirected edge list (symmetrized): fixed-iteration
-    power method. Per round: one equi-join (edge ⋈ rank on the source) +
-    one partial-agged sum by destination — the canonical distributed shape.
-    The rank chain is LAZY (no per-round localCheckpoint): after the
-    constants hoist below it is linear lineage off two pinned tables, and
-    the r14 pinned-vs-lazy A/B measured the per-round pins a 1.06x tie at
-    sf0.1 but a 1.57x LOSS on the 4x scale-proof corpus (8 serialized
-    node-table materializations vs one fused lazy DAG). Every node of a
-    symmetrized graph has out-degree ≥ 1, so there is no dangling mass.
-
-    Cross-engine determinism: per-node contribution sums are O(deg)-term
-    float sums whose association-order noise is ~1e-15 — far below the
-    6 dp rounding of the query output — so a fixed iteration count is
-    hash-checkable against an unrolled SQL oracle."""
-    # pin e BEFORE the symmetrize union (both branches read it; unpinned it
-    # evaluates the upstream edge chain twice)
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct().localCheckpoint(
-        eager=False
-    )
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Symmetrized (u, v) table of a doc_a/doc_b pair list: the distinct
+    pairs plus their reverses. Two lazy pins: _edges, because both union
+    branches read it (unpinned, the upstream pair chain runs twice), and
+    the result, because every round of the caller's loop reads it."""
+    e = _edges(edges)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=False)
-    deg = sym.groupBy("u").agg(F.count("*").alias("deg")).select(
-        F.col("u").alias("node"), "deg"
-    )
-    nn = deg.agg(F.count("*").cast("double").alias("n"))
-    # the per-node constants (deg, n) are hoisted into a pinned base table
-    # so each round consumes the previous rank EXACTLY once (the old
-    # pr.drop("pr").join(acc) second consumption is what forced a
-    # localCheckpoint per round) — the rank chain is now linear lineage
-    # with no per-round barrier (opt guide §2.4); values unchanged
-    base = deg.crossJoin(F.broadcast(nn)).localCheckpoint(eager=False)
-    pr = base.select("node", "deg", "n", (F.lit(1.0) / F.col("n")).alias("pr"))
+    return sym.localCheckpoint(eager=False)
+
+
+def _power_iterate(
+    sym: DataFrame, base: DataFrame, init: F.Column, teleport: F.Column, n_iter: int
+) -> DataFrame:
+    """Fixed-iteration power method on a symmetrized graph:
+    pr <- teleport + d·Σ_{u→node} pr(u)/deg(u), starting from pr = init.
+    `base` holds one row per node with `deg` and the per-node constants
+    that `init` and `teleport` read; it is pinned by the caller, so each
+    round reads the previous rank exactly once and the rank chain stays
+    lazy, linear lineage. A per-round pin would serialize one node-table
+    materialization per round instead of one fused DAG, which loses as
+    the graph grows. Per round: one edge⋈rank equi-join on the source and
+    one partial-agged sum by destination. Every node of a symmetrized
+    graph has out-degree ≥ 1, so there is no dangling mass.
+    → base's columns plus pr."""
+    pr = base.withColumn("pr", init)
     for _ in range(n_iter):
         acc = (
             sym.join(pr.select(F.col("node").alias("u"), "deg", "pr"), "u")
@@ -510,12 +506,29 @@ def pagerank(
             .select(F.col("v").alias("node"), "acc")
         )
         pr = base.join(acc, "node", "left").select(
-            "node", "deg", "n",
-            (
-                F.lit(1.0 - damping) / F.col("n")
-                + F.lit(damping) * F.coalesce("acc", F.lit(0.0))
-            ).alias("pr"),
+            *base.columns,
+            (teleport + F.lit(PR_DAMP) * F.coalesce("acc", F.lit(0.0))).alias("pr"),
         )
+    return pr
+
+
+def pagerank(edges: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
+    """PageRank on an undirected edge list (symmetrized): _power_iterate
+    with the uniform teleport (1-d)/n, started from 1/n.
+
+    Cross-engine determinism: per-node contribution sums are O(deg)-term
+    float sums whose association-order noise is ~1e-15 — far below the
+    6 dp rounding of the query output — so a fixed iteration count is
+    hash-checkable against an unrolled SQL oracle."""
+    sym = _undirected(edges)
+    deg = sym.groupBy("u").agg(F.count("*").alias("deg")).select(
+        F.col("u").alias("node"), "deg"
+    )
+    nn = deg.agg(F.count("*").cast("double").alias("n"))
+    base = deg.crossJoin(F.broadcast(nn)).localCheckpoint(eager=False)
+    pr = _power_iterate(
+        sym, base, F.lit(1.0) / F.col("n"), F.lit(1.0 - PR_DAMP) / F.col("n"), n_iter
+    )
     return pr.select("node", "deg", "pr")
 
 
@@ -557,27 +570,19 @@ PPR_SEED_SOURCE = "src0"
 
 
 def personalized_pagerank(
-    edges: DataFrame, seeds: DataFrame, a: str = "doc_a", b: str = "doc_b",
-    damping: float = PR_DAMP, n_iter: int = PR_ITER,
+    edges: DataFrame, seeds: DataFrame, n_iter: int = PR_ITER
 ) -> DataFrame:
     """Personalized PageRank (Page et al. 1999 §6; Jeh & Widom 2002 WWW
     "Scaled Personalized PageRank"): the power method with teleport mass
     restricted to a seed set S — pr = (1-d)·1[node∈S]/|S| + d·Σ pr(u)/deg(u)
     — the standard "related items" / seed-expansion primitive (e.g.
-    Twitter WTF, Gupta et al. 2013). Same distributed shape as pagerank
-    (one edge⋈rank equi-join + one keyed sum per round, lazy rank chain —
-    see pagerank's A/B note); the seed indicator is a broadcast-joined column, and
-    seed mass |S| is a 1-row broadcast. Unlike uniform PageRank the
-    stationary mass concentrates around S, so the readout doubles as a
-    graph-proximity score to the seed source.
+    Twitter WTF, Gupta et al. 2013). _power_iterate with the teleport
+    vector as a pinned per-node column; the seed indicator is a
+    broadcast-joined column, and seed mass |S| is a 1-row broadcast.
+    Unlike uniform PageRank the stationary mass concentrates around S, so
+    the readout doubles as a graph-proximity score to the seed source.
     → (node, deg, is_seed, ppr)."""
-    # pin e BEFORE the symmetrize union (both branches read it; unpinned it
-    # evaluates the upstream edge chain twice)
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct().localCheckpoint(
-        eager=False
-    )
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=False)
+    sym = _undirected(edges)
     deg = sym.groupBy("u").agg(F.count("*").alias("deg")).select(
         F.col("u").alias("node"), "deg"
     )
@@ -589,12 +594,8 @@ def personalized_pagerank(
     )
     ns = base.agg(F.sum("is_seed").cast("double").alias("ns"))
     # teleport vector: 1/|S| on seeds, 0 elsewhere; start pr = teleport.
-    # NULLIF guards the empty-seed-set case (ns = 0): both engines then
-    # produce an all-zero teleport vector instead of engine-divergent
-    # division-by-zero results (ADVICE r06).
-    # per-node constants (deg, is_seed, tele) pinned once so each round
-    # consumes the previous rank EXACTLY once — linear lineage, no
-    # per-round localCheckpoint barrier (same rewrite as pagerank)
+    # NULLIF keeps an empty seed set (ns = 0) an all-zero teleport vector
+    # in both engines instead of an engine-specific division by zero.
     base = (
         base.crossJoin(F.broadcast(ns))
         .select(
@@ -605,21 +606,9 @@ def personalized_pagerank(
         )
         .localCheckpoint(eager=False)
     )
-    pr = base.withColumn("pr", F.col("tele"))
-    for _ in range(n_iter):
-        acc = (
-            sym.join(pr.select(F.col("node").alias("u"), "deg", "pr"), "u")
-            .groupBy("v")
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("acc"))
-            .select(F.col("v").alias("node"), "acc")
-        )
-        pr = base.join(acc, "node", "left").select(
-            "node", "deg", "is_seed", "tele",
-            (
-                F.lit(1.0 - damping) * F.col("tele")
-                + F.lit(damping) * F.coalesce("acc", F.lit(0.0))
-            ).alias("pr"),
-        )
+    pr = _power_iterate(
+        sym, base, F.col("tele"), F.lit(1.0 - PR_DAMP) * F.col("tele"), n_iter
+    )
     return pr.select(
         "node", "deg", F.col("is_seed").cast("bigint").alias("is_seed"),
         F.col("pr").alias("ppr"),
@@ -837,8 +826,7 @@ _REGISTRY.update(
 KCORE_K, KCORE_ROUNDS = 2, 4
 
 
-def kcore_nodes(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS,
-                a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+def kcore_nodes(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
     """k-core via synchronous peeling: each round drops nodes whose degree
     among SURVIVORS is < k; `rounds` fixed rounds (fixed-point for this
     graph size is asserted in tests; fixed rounds keep the computation
@@ -847,8 +835,7 @@ def kcore_nodes(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS,
     Per round: one degree aggregation + one semi-join — both keyed on the
     node id, uniform shuffles; the survivor set is localCheckpointed so the
     plan stays bounded (lineage would otherwise double per round)."""
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
-    e = e.localCheckpoint(eager=False)
+    e = _edges(edges)
     for _ in range(rounds):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -874,8 +861,6 @@ def kcore_nodes(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS,
 
 
 def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
-
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     return canon_types(kcore_nodes(pairs))
 
@@ -884,8 +869,6 @@ def _kcore_sql() -> str:
     # AS MATERIALIZED is load-bearing: each round references the previous
     # round's edge CTE three times, so DuckDB's default CTE inlining would
     # re-evaluate the whole jaccard chain 3^rounds times
-    from . import dedup
-
     jp = dedup.jaccard_pairs_sql(["lang"], threshold=CLUSTER_THR)
     rounds = []
     prev = "e0"
@@ -919,54 +902,59 @@ _REGISTRY.update(
 BFS_SEED_MOD, BFS_MAX_DEPTH = 13, 6
 
 
-def bfs_distances(
-    edges: DataFrame,
-    seed_mod: int = BFS_SEED_MOD,
-    max_depth: int = BFS_MAX_DEPTH,
-    a: str = "doc_a",
-    b: str = "doc_b",
+def _bfs_frontier(
+    und: DataFrame, keys: tuple[str, ...], seed_mod: int, max_depth: int
 ) -> DataFrame:
-    """Multi-source BFS hop distances (seeds = node id % seed_mod == 0),
-    the Pregel pattern: each round joins the frontier with the edge list,
-    anti-joins already-visited nodes, and unions the new layer into the
-    distance table. Frontier and distances are localCheckpointed per round
-    (lineage would otherwise double); rounds are keyed equi-joins on the
-    node id — uniform shuffles, no driver-side data. Unreached nodes are
-    omitted (same convention both engines)."""
-    # pin e BEFORE the symmetrize union: e feeds both union branches, so an
-    # unpinned e evaluates the (expensive) upstream pair chain twice
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint(
-        eager=False
-    )
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    und = und.localCheckpoint(eager=False)
+    """Multi-source BFS hop distances over a symmetrized edge table, the
+    Pregel pattern: seeds are the nodes with id % seed_mod == 0; each
+    round joins the frontier with the edge list, anti-joins already-visited
+    states and unions the new layer into the distance table. A state is
+    (*keys, node): with keys == () all seeds share one distance table,
+    with keys == ("src",) each seed tags its own BFS, so all seeds expand
+    in the same keyed joins per round. The distance table is lazily
+    pinned per round, because lineage would otherwise double every round;
+    the new layer is pinned eagerly, because both the emptiness probe and
+    the union read it. Rounds are keyed equi-joins on the node id —
+    uniform shuffles, no driver-side data. → (*keys, node, dist)."""
+    state = [*keys, "node"]
     dist = (
         und.select("u").distinct()
         .filter(F.col("u") % seed_mod == 0)
-        .select(F.col("u").alias("node"), F.lit(0).cast("bigint").alias("dist"))
+        .select(
+            *[F.col("u").alias(k) for k in keys],
+            F.col("u").alias("node"),
+            F.lit(0).cast("bigint").alias("dist"),
+        )
         .localCheckpoint(eager=False)
     )
-    frontier = dist.select("node")
+    frontier = dist.select(*state)
     for d in range(1, max_depth + 1):
         cand = (
             frontier.join(und, frontier.node == und.u)
-            .select(F.col("v").alias("node"))
+            .select(*keys, F.col("v").alias("node"))
             .distinct()
         )
-        new = cand.join(dist.select("node"), "node", "left_anti").select(
-            "node", F.lit(d).cast("bigint").alias("dist")
+        new = cand.join(dist.select(*state), state, "left_anti").select(
+            *state, F.lit(d).cast("bigint").alias("dist")
         )
-        new = new.localCheckpoint()  # eager: reused by the emptiness probe AND the union
+        new = new.localCheckpoint()
         if not new.take(1):
             break
         dist = dist.union(new).localCheckpoint(eager=False)
-        frontier = new.select("node")
+        frontier = new.select(*state)
     return dist
 
 
-def _q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
+def bfs_distances(
+    edges: DataFrame, seed_mod: int = BFS_SEED_MOD, max_depth: int = BFS_MAX_DEPTH
+) -> DataFrame:
+    """Multi-source BFS hop distances (seeds = node id % seed_mod == 0):
+    _bfs_frontier with one shared distance table. Unreached nodes are
+    omitted (same convention both engines). → (node, dist)."""
+    return _bfs_frontier(_undirected(edges), (), seed_mod, max_depth)
 
+
+def _q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     return canon_types(bfs_distances(pairs))
 
@@ -976,8 +964,6 @@ def _bfs_sql() -> str:
     # (node, dist) pairs per step, so the working set is bounded by
     # nodes x depth instead of the exponential path count inside near-dup
     # cliques; min(dist) at the end equals BFS first-visit depth.
-    from . import dedup
-
     jp = dedup.jaccard_pairs_sql(["lang"], threshold=CLUSTER_THR)
     return f"""
 WITH RECURSIVE jp AS MATERIALIZED ({jp}),
@@ -993,54 +979,18 @@ SELECT node, CAST(min(dist) AS BIGINT) AS dist FROM rec GROUP BY node
 
 
 def harmonic_centrality(
-    edges: DataFrame,
-    seed_mod: int = BFS_SEED_MOD,
-    max_depth: int = BFS_MAX_DEPTH,
-    a: str = "doc_a",
-    b: str = "doc_b",
+    edges: DataFrame, seed_mod: int = BFS_SEED_MOD, max_depth: int = BFS_MAX_DEPTH
 ) -> DataFrame:
     """Harmonic centrality (Boldi & Vigna 2014, "Axioms for centrality"):
     H(s) = Σ_{v≠s} 1/d(s,v), summed over nodes reached within max_depth —
     the closeness variant that handles disconnected graphs. Computed for
     the seed set (node % seed_mod == 0) by a SOURCE-TAGGED multi-source
-    BFS: the Pregel loop of bfs_distances with (src, node) state, so all
-    seeds expand in the same keyed joins per round instead of one BFS per
-    seed. State is |seeds|·|reached| rows — the honest cost of exact
-    multi-source distances; at cluster scale you bound it by sampling
-    seeds (seed_mod) and capping depth, exactly as parameterized here.
+    BFS: _bfs_frontier with (src, node) state. State is |seeds|·|reached|
+    rows — the honest cost of exact multi-source distances; at cluster
+    scale you bound it by sampling seeds (seed_mod) and capping depth,
+    exactly as parameterized here.
     → (src, n_reached, harmonic)."""
-    # pin e BEFORE the symmetrize union: e feeds both union branches, so an
-    # unpinned e evaluates the (expensive) upstream pair chain twice
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint(
-        eager=False
-    )
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    und = und.localCheckpoint(eager=False)
-    dist = (
-        und.select("u").distinct()
-        .filter(F.col("u") % seed_mod == 0)
-        .select(
-            F.col("u").alias("src"),
-            F.col("u").alias("node"),
-            F.lit(0).cast("bigint").alias("dist"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    frontier = dist.select("src", "node")
-    for d in range(1, max_depth + 1):
-        cand = (
-            frontier.join(und, frontier.node == und.u)
-            .select("src", F.col("v").alias("node"))
-            .distinct()
-        )
-        new = cand.join(dist.select("src", "node"), ["src", "node"], "left_anti").select(
-            "src", "node", F.lit(d).cast("bigint").alias("dist")
-        )
-        new = new.localCheckpoint()  # eager: reused by emptiness probe AND union
-        if not new.take(1):
-            break
-        dist = dist.union(new).localCheckpoint(eager=False)
-        frontier = new.select("src", "node")
+    dist = _bfs_frontier(_undirected(edges), ("src",), seed_mod, max_depth)
     return (
         dist.filter(F.col("dist") > 0)
         .groupBy("src")
@@ -1055,15 +1005,11 @@ def harmonic_centrality(
 
 
 def _q_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
-
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     return canon_types(harmonic_centrality(pairs))
 
 
 def _closeness_sql() -> str:
-    from . import dedup
-
     jp = dedup.jaccard_pairs_sql(["lang"], threshold=CLUSTER_THR)
     return f"""
 WITH RECURSIVE jp AS MATERIALIZED ({jp}),
@@ -1096,11 +1042,7 @@ LP_ITER = 4
 
 
 def label_propagation(
-    edges: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    n_iter: int = LP_ITER,
-    early_exit: bool = True,
+    edges: DataFrame, n_iter: int = LP_ITER, early_exit: bool = True
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et al.
     2007, Phys. Rev. E 76): init label = node id; each round every node
@@ -1113,23 +1055,17 @@ def label_propagation(
     aggregation + one per-node argmax window — all keyed on the node id,
     uniform shuffles; the vote-count table a window ranks over holds at
     most deg(v)+1 distinct labels per node, so the window input is the
-    message table itself, never a global sort. Labels are checkpointed per
-    round (lineage hygiene as in pagerank/connected_components).
+    message table itself, never a global sort. Labels are lazily pinned
+    per round, because each round reads the previous labels twice (votes
+    and self-vote) and lineage would otherwise double every round.
 
-    early_exit (VERDICT r04 item 5): stop as soon as a round changes zero
-    labels. The update is a deterministic function of the label table, so
+    early_exit: stop as soon as a round changes zero labels. The update is a deterministic function of the label table, so
     once a round is the identity every later round is too — the result is
     bit-identical to the fixed-round unrolled oracle; we just skip the
     no-op rounds. The convergence probe is a keyed equi-join on node
     (co-partitioned with the round's own shuffle) capped with limit(1),
     so it scans only until the first changed label."""
-    # pin e BEFORE the symmetrize union (both branches read it; unpinned it
-    # evaluates the upstream edge chain twice)
-    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct().localCheckpoint(
-        eager=False
-    )
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=False)
+    sym = _undirected(edges)
     lab = (
         sym.select(F.col("u").alias("node")).distinct()
         .withColumn("label", F.col("node"))
@@ -1166,8 +1102,6 @@ def label_propagation(
 
 
 def _q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
-
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     return canon_types(label_propagation(pairs))
 
@@ -1176,8 +1110,6 @@ def _communities_sql() -> str:
     # AS MATERIALIZED on every round: each round references the previous
     # label CTE twice (neighbor votes + self-vote), so DuckDB's default
     # inlining would re-evaluate the jaccard chain 2^rounds times
-    from . import dedup
-
     jp = dedup.jaccard_pairs_sql(["lang"], threshold=CLUSTER_THR)
     ctes = [
         f"jp AS MATERIALIZED ({jp})",
@@ -1833,16 +1765,12 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def _q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
-
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     pairs = pairs.localCheckpoint(eager=False)
     return modularity(pairs, label_propagation(pairs))
 
 
 def _modularity_sql() -> str:
-    from . import dedup
-
     comm = _communities_sql()
     return f"""
 WITH lab AS MATERIALIZED ({comm}),
@@ -1918,15 +1846,11 @@ def assortativity(edges: DataFrame) -> DataFrame:
 
 
 def _q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup
-
     pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
     return assortativity(pairs)
 
 
 def _assortativity_sql() -> str:
-    from . import dedup
-
     jp = dedup.jaccard_pairs_sql(["lang"], threshold=CLUSTER_THR)
     return f"""
 WITH jp AS MATERIALIZED ({jp}),

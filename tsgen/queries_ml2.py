@@ -92,107 +92,93 @@ base AS MATERIALIZED (
 
 
 # --- ev_logreg -------------------------------------------------------------
-def logreg_irls(base: DataFrame, iters: int = LOGREG_ITERS) -> DataFrame:
-    """IRLS over (x, y) starting from beta = (0, 0). Returns one row per
-    iteration: iter, beta0, beta1 (6dp display of the 12dp state),
-    avg_loglik after the update, n."""
+def _eta() -> F.Column:
+    """Linear predictor η = b0 + b1·x over the broadcast 1-row beta."""
+    return F.col("b0") + F.col("b1") * F.col("x")
+
+
+def _irls(
+    base: DataFrame, iters: int, mu: F.Column, w: F.Column, ll: F.Column
+) -> DataFrame:
+    """Two-parameter GLM fit by IRLS / Newton-Raphson over (x, y), starting
+    from beta = (0, 0). The GLM is given as Columns over x, y and the
+    broadcast betas b0, b1: the mean `mu` = μ(η), the IRLS weight `w` =
+    w(μ) and the per-row log-likelihood term `ll`. Each Newton step solves
+    the 2x2 normal system in closed form from five sufficient statistics
+    (Σw, Σwx, Σwx², Σ(y-μ), Σ(y-μ)x) rounded to 4dp, and rounds the new
+    betas to 12dp, so both engines replay the same recursion bit for bit.
+
+    One aggregate pass over `base` per beta: iteration k's diagnostics and
+    iteration k+1's statistics both read `base` under beta_k, so they run
+    as one aggregate with independent buffers, iters+1 passes in all. The
+    design table is lazily pinned because every pass reads it; each new
+    1-row beta is pinned eagerly so lineage (and scan count) stays linear
+    in iterations; each fused pass is pinned lazily, so it materializes
+    inside the next beta's eager pin (or the final action) and the emitted
+    row reads the cached result without an extra job.
+    → (iter, beta0, beta1, avg_ll, n), one row per iteration, unrounded."""
     spark = base.sparkSession
-    # pin the (x, y) design projection once: every IRLS pass reads it
-    # twice (sufficient stats + loglik row), and unpinned each read
-    # re-ran the events scan/groupBy (recompute census: 8 scans/plan).
-    # Caching the slim design table is the standard IRLS shape (MLlib).
     base = base.localCheckpoint(eager=False)
+    x, y = F.col("x"), F.col("y")
 
-    # ONE fused pass over `base` per beta (VERDICT r13 item 3, opt guide
-    # §1.2 "don't compute things twice"): iteration k's loglik row and
-    # iteration k+1's sufficient statistics both scan `base` under the SAME
-    # beta_k, so they run as one combined aggregate — 2·iters data passes
-    # become iters+1 (the beta_0 stats pass emits no loglik row; the last
-    # beta's pass computes no next step). Every expression, rounding rule
-    # and accumulation (same pinned partitioning, same per-column sums) is
-    # unchanged, so the emitted values are identical — oracle-verified.
-    def _stats(beta: DataFrame) -> DataFrame:
-        """Sufficient statistics of the Newton step under `beta` (4dp)."""
-        z = F.col("b0") + F.col("b1") * F.col("x")
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        w = p * (F.lit(1.0) - p)
-        aggs = base.crossJoin(F.broadcast(beta)).agg(
-            F.sum(w).alias("s00"),
-            F.sum(w * F.col("x")).alias("s01"),
-            F.sum(w * F.col("x") * F.col("x")).alias("s11"),
-            F.sum(F.col("y") - p).alias("g0"),
-            F.sum((F.col("y") - p) * F.col("x")).alias("g1"),
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-        )
-        return roundn(aggs, 4, "s00", "s01", "s11", "g0", "g1")
-
-    def _fused(beta: DataFrame, last: bool) -> DataFrame:
-        """Loglik diagnostics under `beta` PLUS (unless last) the next
-        step's sufficient statistics, in one aggregate pass."""
-        z = F.col("b0") + F.col("b1") * F.col("x")
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        w = p * (F.lit(1.0) - p)
-        cols = [
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.avg(
-                F.col("y") * F.log(p) + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-            ).alias("avg_loglik"),
-            F.count("*").alias("n"),
-        ]
-        if not last:
+    def _pass(beta: DataFrame, diag: bool, stats: bool) -> DataFrame:
+        cols = [F.first("b0").alias("b0"), F.first("b1").alias("b1")]
+        if diag:
+            cols += [F.avg(ll).alias("avg_ll"), F.count("*").alias("n")]
+        if stats:
             cols += [
                 F.sum(w).alias("s00"),
-                F.sum(w * F.col("x")).alias("s01"),
-                F.sum(w * F.col("x") * F.col("x")).alias("s11"),
-                F.sum(F.col("y") - p).alias("g0"),
-                F.sum((F.col("y") - p) * F.col("x")).alias("g1"),
+                F.sum(w * x).alias("s01"),
+                F.sum(w * x * x).alias("s11"),
+                F.sum(y - mu).alias("g0"),
+                F.sum((y - mu) * x).alias("g1"),
             ]
         one = base.crossJoin(F.broadcast(beta)).agg(*cols)
-        if not last:
-            one = roundn(one, 4, "s00", "s01", "s11", "g0", "g1")
-        return one
+        return roundn(one, 4, "s00", "s01", "s11", "g0", "g1") if stats else one
 
     def _step(stats: DataFrame) -> DataFrame:
-        """Closed-form 2x2 Newton update from 4dp stats (12dp beta)."""
-        solved = stats.withColumn(
-            "det", F.col("s00") * F.col("s11") - F.col("s01") * F.col("s01")
-        )
+        s00, s01, s11 = F.col("s00"), F.col("s01"), F.col("s11")
+        g0, g1 = F.col("g0"), F.col("g1")
+        solved = stats.withColumn("det", s00 * s11 - s01 * s01)
         return solved.select(
             F.round(
-                F.col("b0")
-                + (F.col("s11") * F.col("g0") - F.col("s01") * F.col("g1")) / F.col("det")
-                + F.lit(1.0e-15),
-                12,
+                F.col("b0") + (s11 * g0 - s01 * g1) / F.col("det") + F.lit(1.0e-15), 12
             ).alias("b0"),
             F.round(
-                F.col("b1")
-                + (F.col("s00") * F.col("g1") - F.col("s01") * F.col("g0")) / F.col("det")
-                + F.lit(1.0e-15),
-                12,
+                F.col("b1") + (s00 * g1 - s01 * g0) / F.col("det") + F.lit(1.0e-15), 12
             ).alias("b1"),
         )
 
     beta = spark.range(1).select(F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"))
-    beta = _step(_stats(beta)).localCheckpoint(eager=True)
+    beta = _step(_pass(beta, diag=False, stats=True)).localCheckpoint(eager=True)
     out = None
     for it in range(1, iters + 1):
-        # lazy pin: the fused pass materializes inside the next beta's eager
-        # pin (or the final action for the last iteration) and the loglik row
-        # then reads the cached 1-row result — no extra job per iteration
-        fused = _fused(beta, last=(it == iters)).localCheckpoint(eager=False)
+        fused = _pass(beta, diag=True, stats=it < iters).localCheckpoint(eager=False)
         row = fused.select(
             F.lit(it).cast("bigint").alias("iter"),
             F.col("b0").alias("beta0"),
             F.col("b1").alias("beta1"),
-            "avg_loglik",
+            "avg_ll",
             "n",
         )
         out = row if out is None else out.unionByName(row)
         if it < iters:
             beta = _step(fused).localCheckpoint(eager=True)
-    return round6(out, "beta0", "beta1", "avg_loglik")
+    return out
+
+
+def logreg_irls(base: DataFrame, iters: int = LOGREG_ITERS) -> DataFrame:
+    """Logistic regression by _irls over (x, y): sigmoid mean, Bernoulli
+    weight p(1-p) and log-likelihood. Returns one row per iteration: iter,
+    beta0, beta1 (6dp display of the 12dp state), avg_loglik after the
+    update, n."""
+    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_eta()))
+    y = F.col("y")
+    out = _irls(
+        base, iters, p, p * (F.lit(1.0) - p),
+        y * F.log(p) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - p),
+    )
+    return round6(out.withColumnRenamed("avg_ll", "avg_loglik"), "beta0", "beta1", "avg_loglik")
 
 
 def _q_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,12 +487,9 @@ POIS_ITERS = 7
 
 
 def poisson_glm(ev: DataFrame, iters: int = POIS_ITERS) -> DataFrame:
-    """Poisson regression fit by IRLS — the canonical counts model
-    (events per user-day ~ exp(b0 + b1*is_weekend)), sharing the exact
-    machinery of ev_logreg with GLM weights w = mu and score residual
-    y - mu: per iteration ONE 5-number sufficient-statistics aggregate,
-    closed-form 2x2 solve, 4dp-stat / 12dp-beta rounded recursion so the
-    unrolled-CTE oracle replays bit-for-bit. exp(b1) is the weekend rate
+    """Poisson regression fit by _irls — the canonical counts model
+    (events per user-day ~ exp(b0 + b1*is_weekend)): mean μ = exp(η), GLM
+    weight w = μ, log-likelihood core yη - μ. exp(b1) is the weekend rate
     ratio — the interpretable output.
 
     Scale shape: one groupBy((user, day)) builds the counts table; each
@@ -519,85 +502,17 @@ def poisson_glm(ev: DataFrame, iters: int = POIS_ITERS) -> DataFrame:
         # epoch day 0 = Thursday -> (d+3)%7 maps Sat=5, Sun=6
         .withColumn("x", (((F.col("d") + 3) % 7) >= 5).cast("double"))
     )
-    spark = ev.sparkSession
-    base = base.localCheckpoint(eager=False)  # same pin as logreg_irls
-
-    # Same fused-pass rewrite as logreg_irls (VERDICT r13 item 3): loglik
-    # row k and stats k+1 share beta_k, so one combined aggregate replaces
-    # the two base passes — 2·iters passes become iters+1. Expressions,
-    # rounding and accumulation order unchanged; oracle-verified.
-    def _stats(beta: DataFrame) -> DataFrame:
-        mu = F.exp(F.col("b0") + F.col("b1") * F.col("x"))
-        aggs = base.crossJoin(F.broadcast(beta)).agg(
-            F.sum(mu).alias("s00"),
-            F.sum(mu * F.col("x")).alias("s01"),
-            F.sum(mu * F.col("x") * F.col("x")).alias("s11"),
-            F.sum(F.col("y") - mu).alias("g0"),
-            F.sum((F.col("y") - mu) * F.col("x")).alias("g1"),
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-        )
-        return roundn(aggs, 4, "s00", "s01", "s11", "g0", "g1")
-
-    def _fused(beta: DataFrame, last: bool) -> DataFrame:
-        mu = F.exp(F.col("b0") + F.col("b1") * F.col("x"))
-        cols = [
-            F.first("b0").alias("b0"),
-            F.first("b1").alias("b1"),
-            F.avg(
-                F.col("y") * (F.col("b0") + F.col("b1") * F.col("x")) - mu
-            ).alias("avg_ll_core"),
-            F.count("*").alias("n"),
-        ]
-        if not last:
-            cols += [
-                F.sum(mu).alias("s00"),
-                F.sum(mu * F.col("x")).alias("s01"),
-                F.sum(mu * F.col("x") * F.col("x")).alias("s11"),
-                F.sum(F.col("y") - mu).alias("g0"),
-                F.sum((F.col("y") - mu) * F.col("x")).alias("g1"),
-            ]
-        one = base.crossJoin(F.broadcast(beta)).agg(*cols)
-        if not last:
-            one = roundn(one, 4, "s00", "s01", "s11", "g0", "g1")
-        return one
-
-    def _step(stats: DataFrame) -> DataFrame:
-        solved = stats.withColumn(
-            "det", F.col("s00") * F.col("s11") - F.col("s01") * F.col("s01")
-        )
-        return solved.select(
-            F.round(
-                F.col("b0")
-                + (F.col("s11") * F.col("g0") - F.col("s01") * F.col("g1")) / F.col("det")
-                + F.lit(1.0e-15),
-                12,
-            ).alias("b0"),
-            F.round(
-                F.col("b1")
-                + (F.col("s00") * F.col("g1") - F.col("s01") * F.col("g0")) / F.col("det")
-                + F.lit(1.0e-15),
-                12,
-            ).alias("b1"),
-        )
-
-    beta = spark.range(1).select(F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"))
-    beta = _step(_stats(beta)).localCheckpoint(eager=True)
-    out = None
-    for it in range(1, iters + 1):
-        fused = _fused(beta, last=(it == iters)).localCheckpoint(eager=False)
-        row = fused.select(
-            F.lit(it).cast("bigint").alias("iter"),
-            F.col("b0").alias("beta0"),
-            F.col("b1").alias("beta1"),
-            F.exp(F.col("b1")).alias("weekend_ratio"),
-            "avg_ll_core",
+    mu = F.exp(_eta())
+    out = _irls(base, iters, mu, mu, F.col("y") * _eta() - mu)
+    return round6(
+        out.select(
+            "iter", "beta0", "beta1",
+            F.exp(F.col("beta1")).alias("weekend_ratio"),
+            F.col("avg_ll").alias("avg_ll_core"),
             "n",
-        )
-        out = row if out is None else out.unionByName(row)
-        if it < iters:
-            beta = _step(fused).localCheckpoint(eager=True)
-    return round6(out, "beta0", "beta1", "weekend_ratio", "avg_ll_core")
+        ),
+        "beta0", "beta1", "weekend_ratio", "avg_ll_core",
+    )
 
 
 def _q_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -152,28 +152,31 @@ def _assign_to_centroids(v: DataFrame, seeds: DataFrame) -> DataFrame:
     )
 
 
-def _recompute_centroids(assigned: DataFrame) -> DataFrame:
-    """Lloyd step: new centroid = element-wise mean of each cell's vectors.
+def _centroid_mean(assigned: DataFrame, key: str, out: str) -> DataFrame:
+    """Lloyd step: each group's centroid is the element-wise mean of the
+    `_vec` arrays assigned to it. → (key bigint, out array<double>).
 
-    posexplode → (cell, dim_idx) partial-agg avg, then the n_cells·dim
-    result is pinned to the DRIVER (bounded state) and re-injected via
-    createDataFrame — keeping it as lineage instead embeds the previous
-    assignment pass inside every downstream plan, so each branch re-scans
-    the corpus once per refinement round (recompute census: ann_ivf_recall
-    at 10 embeddings scans). collect() round-trips the exact IEEE doubles;
-    snorm is recomputed from the re-injected svec with the same Spark
-    expression, so values are bit-identical to the lineage form."""
-    comp = assigned.select("cell_id", F.posexplode("_vec").alias("i", "x"))
-    mean_rows = comp.groupBy("cell_id", "i").agg(F.avg("x").alias("m")).collect()
+    posexplode → (key, dim_idx) partial-agg avg, then the k·dim result is
+    pinned to the DRIVER (bounded state, the pattern MLlib's own KMeans
+    uses) and re-injected via createDataFrame. Kept as lineage instead,
+    every earlier round would sit inside the next round's plan, and each
+    downstream branch would re-scan the corpus once per round. collect()
+    round-trips the exact IEEE doubles, so values are bit-identical to
+    the lineage form; one job per round replaces per-branch recompute."""
+    comp = assigned.select(key, F.posexplode("_vec").alias("i", "x"))
+    mean_rows = comp.groupBy(key, "i").agg(F.avg("x").alias("m")).collect()
     by_c: dict[int, list[tuple[int, float]]] = {}
     for r in mean_rows:
-        by_c.setdefault(r["cell_id"], []).append((r["i"], r["m"]))
+        by_c.setdefault(r[key], []).append((r["i"], r["m"]))
     rows = [(cid, [m for _, m in sorted(pts)]) for cid, pts in sorted(by_c.items())]
-    cent = assigned.sparkSession.createDataFrame(rows, "cell_id bigint, svec array<double>")
-    dot = F.aggregate(
-        F.zip_with("svec", "svec", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return cent.withColumn("snorm", F.sqrt(dot))
+    return assigned.sparkSession.createDataFrame(rows, f"{key} bigint, {out} array<double>")
+
+
+def _recompute_centroids(assigned: DataFrame) -> DataFrame:
+    """IVF Lloyd step: _centroid_mean per cell plus snorm, recomputed from
+    the re-injected svec with the same Spark expression as with_norm."""
+    cent = _centroid_mean(assigned, "cell_id", "svec")
+    return cent.withColumn("snorm", F.sqrt(cosine("svec", "svec")))
 
 
 def ivf_assign(
@@ -1426,9 +1429,9 @@ def _gram_sufficient_stats(df: DataFrame, vec: str = "embedding"):
     floats) via an Arrow-batched mapInPandas; the records are exploded to
     (slot, value) and summed by slot (tiny shuffle: partitions x dim^2/2
     rows regardless of row count). Shared by pca_variance / top_eigen /
-    pca_power / the ABTT front half — all of which previously rebuilt the
-    covariance through an n·dim^2 exploded self-join that was
-    compute-quadratic in dim per vector (VERDICT r08)."""
+    pca_power / the ABTT front half, so none of them builds the covariance
+    through an n·dim^2 exploded self-join, which is compute-quadratic in
+    dim per vector."""
     import numpy as np
     import pandas as pd
 
@@ -2058,54 +2061,35 @@ def _argmin_l2_lazy(cc: DataFrame, id_col: str, vec_col: str):
 
 
 def _lloyd_centroids(v: DataFrame, k: int, iters: int, assign) -> DataFrame:
-    """Run the Lloyd rounds with the centroid table pinned to the DRIVER
-    between rounds (k x dim doubles — bounded state, the pattern MLlib's
-    own KMeans uses). Keeping centroids as chained DataFrame lineage
-    instead embeds every earlier round inside the next round's plan, so
-    the final assignment re-scanned the corpus once per round per
-    downstream branch — the plan-lint recompute census caught
-    embed_cluster_purity at 55 corpus scans. collect() re-injects the
-    exact same IEEE doubles via createDataFrame, so values are unchanged;
-    per-round job submission replaces per-branch recompute."""
-    spark = v.sparkSession
+    """Run `iters` Lloyd rounds from the first k vectors, each round's
+    centroid table pinned to the driver by _centroid_mean."""
     cents = v.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"), F.col("_vec").alias("cvec")
     )
     for _ in range(iters):
-        assigned = assign(cents)
-        comp = assigned.select("cluster_id", F.posexplode("_vec").alias("i", "x"))
-        mean_rows = comp.groupBy("cluster_id", "i").agg(F.avg("x").alias("m")).collect()
-        by_c: dict[int, list[tuple[int, float]]] = {}
-        for r in mean_rows:
-            by_c.setdefault(r["cluster_id"], []).append((r["i"], r["m"]))
-        rows = [(cid, [m for _, m in sorted(pts)]) for cid, pts in sorted(by_c.items())]
-        cents = spark.createDataFrame(rows, "cluster_id bigint, cvec array<double>")
+        cents = _centroid_mean(assign(cents), "cluster_id", "cvec")
     return cents
 
 
-def kmeans_l2(
-    df: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS, vec: str = "embedding"
-) -> DataFrame:
+def _kmeans_fit(df: DataFrame, k: int, iters: int, vec: str) -> DataFrame:
     """Classic Lloyd k-means under L2 with DETERMINISTIC init (centroids =
-    the first k vectors by vec_id): `iters` assign+recompute rounds, one
-    final assignment, then per-cluster size and inertia. Every stage is the
-    broadcast-centroids pattern (k rows broadcast; the corpus streams), so
-    the whole fit is `iters`+1 scans with no quadratic work — the 100 TB
-    path. The fixed round count keeps the computation oracle-replayable as
-    unrolled CTEs (same convention as PageRank/k-core); convergence at this
-    data size is asserted in tests, not assumed.
-
-    → (cluster_id, n, inertia) with inertia = sum of squared distances.
-    """
+    the first k vectors by vec_id): `iters` assign+recompute rounds, then
+    one final assignment. Every stage is the broadcast-centroids pattern
+    (k rows broadcast; the corpus streams), so the whole fit is `iters`+1
+    scans with no quadratic work — the 100 TB path. The fixed round count
+    keeps the computation oracle-replayable as unrolled CTEs (same
+    convention as PageRank/k-core); convergence at this data size is
+    asserted in tests, not assumed.
+    → (vec_id, _vec, cluster_id, d2) with d2 the squared distance."""
     v = df.select("vec_id", F.col(vec).cast("array<double>").alias("_vec"))
 
     def assign(cc: DataFrame) -> DataFrame:
-        # round-before-rank (9dp) vs float-mean centroids (ADVICE r07
-        # class); d2 itself stays unrounded for the inertia sum.
+        # round-before-rank (9dp): float-mean centroids differ in the last
+        # ulp between engines, and an unrounded near-tie would flip the
+        # assignment in one engine only; d2 itself stays unrounded for the
+        # inertia sum.
         # Bounded centroid table (k rows) → single-row broadcast array +
         # per-row argmin fold (no k·N-row exchange+sort; opt guide §2.4).
-        # array_min on (d2r, cluster_id, d2) == the old
-        # orderBy(d2r ASC, cluster_id ASC) rn=1 — bit-identical values.
         # explode(array(best)): evaluate the argmin tree once per row (two
         # direct field references would inline it twice — no CSE across
         # the codegen-fallback HOF chain).
@@ -2121,8 +2105,17 @@ def kmeans_l2(
             )
         )
 
-    final = assign(_lloyd_centroids(v, k, iters, assign))
-    return final.groupBy("cluster_id").agg(
+    return assign(_lloyd_centroids(v, k, iters, assign))
+
+
+def kmeans_l2(
+    df: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS, vec: str = "embedding"
+) -> DataFrame:
+    """Per-cluster size and inertia of the deterministic Lloyd fit
+    (_kmeans_fit).
+    → (cluster_id, n, inertia) with inertia = sum of squared distances.
+    """
+    return _kmeans_fit(df, k, iters, vec).groupBy("cluster_id").agg(
         F.count("*").alias("n"),
         F.round(F.sum("d2") + F.lit(1.0e-9), 4).alias("inertia"),
     )
@@ -2132,19 +2125,9 @@ def kmeans_assignments(
     df: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS, vec: str = "embedding"
 ) -> DataFrame:
     """Final (vec_id, cluster_id) assignment of the deterministic Lloyd fit
-    — same rounds as kmeans_l2, exposing the per-vector labels for
-    downstream evals (cluster purity / NMI)."""
-    v = df.select("vec_id", F.col(vec).cast("array<double>").alias("_vec"))
-
-    def assign(cc: DataFrame) -> DataFrame:
-        # round-before-rank (9dp) vs float-mean centroids (ADVICE r07 class)
-        # — same lazy broadcast-array argmin as kmeans_l2 (opt guide §2.4)
-        cents, best = _argmin_l2_lazy(cc, "cluster_id", "cvec")
-        return v.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "_vec", best["cid"].cast("bigint").alias("cluster_id")
-        )
-
-    return assign(_lloyd_centroids(v, k, iters, assign)).select("vec_id", "cluster_id")
+    (_kmeans_fit), exposing the per-vector labels for downstream evals
+    (cluster purity / NMI)."""
+    return _kmeans_fit(df, k, iters, vec).select("vec_id", "cluster_id")
 
 
 def cluster_purity(emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS) -> DataFrame:
@@ -2711,29 +2694,45 @@ ORDER BY rerank_m
 POWER_ITERS = 40
 
 
+def _deflated_power(C, k: int, iters: int) -> list:
+    """Top-k eigenpairs [(λ, v), ...] of the symmetric matrix C by the
+    FIXED-ITERATION power method with deflation: each component runs
+    `iters` normalized steps from the uniform unit vector, takes
+    λ = vᵀCv, then C deflates to C - λvvᵀ. Each chain is a contractive
+    fixed point, so summation-order ulps between kernels (numpy BLAS vs
+    the oracle's sequential list_sum) cannot accumulate — outputs are
+    4dp-stable. O(k·iters·dim²) driver arithmetic on the collected
+    matrix (64×64 for 64-dim embeddings)."""
+    import numpy as np
+
+    dim = C.shape[0]
+    pairs = []
+    for _ in range(k):
+        v = np.full(dim, 1.0 / np.sqrt(dim))
+        for _ in range(iters):
+            w = C @ v
+            v = w / np.sqrt((w * w).sum())
+        lam = float(v @ (C @ v))
+        pairs.append((lam, v))
+        C = C - lam * np.outer(v, v)
+    return pairs
+
+
 def top_eigen(df: DataFrame, vec: str = "embedding", iters: int = POWER_ITERS) -> DataFrame:
     """Top covariance eigenvalue of the embedding cloud by FIXED-ITERATION
     power method — the oracle-checkable companion to pca_variance (a full
     eigensolve is not SQL-expressible, but k deterministic power steps
-    are). The covariance matrix is built from the Gram-partial mapInPandas
-    kernel (_cov_ddof1 / _gram_sufficient_stats — one pass, tiny slot-sum
-    shuffle, no n·dim² exploded-self-join intermediate; VERDICT r08); the
-    64×64 iteration itself is O(1) driver work, same convention as
-    pca_variance's final eigh. Power iteration is a contractive fixed
-    point, so summation-order ulps between kernels (numpy BLAS vs the
-    oracle's sequential list_sum) cannot accumulate — outputs are
-    4dp-stable.
+    are). The covariance matrix is built in one pass by the Gram-partial
+    mapInPandas kernel (_cov_ddof1 / _gram_sufficient_stats — tiny
+    slot-sum shuffle, no n·dim² exploded-self-join intermediate); the
+    iteration is _deflated_power's first component, O(1) driver work,
+    same convention as pca_variance's final eigh.
 
     → one row: (n, top_eigenvalue, explained_share, trace)."""
     import numpy as np
 
     n, _, C = _cov_ddof1(df, vec)
-    dim = C.shape[0]
-    v = np.full(dim, 1.0 / np.sqrt(dim))
-    for _ in range(iters):
-        w = C @ v
-        v = w / np.sqrt((w * w).sum())
-    lam = float(v @ (C @ v))
+    [(lam, _)] = _deflated_power(C, 1, iters)
     trace = float(np.trace(C))
     spark = df.sparkSession
     out = spark.createDataFrame(
@@ -2800,31 +2799,20 @@ def pca_power(
     deflates to C - lambda v v^T and the next component repeats the same
     fixed-iteration chain. Extends top_eigen (single component) to the
     leading-k spectrum a curation pipeline actually inspects ("how many
-    directions carry the embedding cloud"). Same stability argument:
-    each chain is a contractive fixed point, so BLAS-vs-sequential
-    summation ulps do not accumulate; outputs are 4dp-stable.
+    directions carry the embedding cloud").
 
     Scale shape: identical to top_eigen — the Gram-partial mapInPandas
     kernel (_cov_ddof1) builds C in one pass with a tiny slot-sum shuffle;
-    the k power chains are O(k * iters * dim^2) driver arithmetic on the
-    collected matrix."""
+    the k chains of _deflated_power run on the driver."""
     import numpy as np
 
     _, _, C = _cov_ddof1(df, vec)
-    dim = C.shape[0]
     trace = float(np.trace(C))
     out_rows = []
     cum = 0.0
-    Ck = C
-    for comp in range(1, k + 1):
-        v = np.full(dim, 1.0 / np.sqrt(dim))
-        for _ in range(iters):
-            w = Ck @ v
-            v = w / np.sqrt((w * w).sum())
-        lam = float(v @ (Ck @ v))
+    for comp, (lam, _) in enumerate(_deflated_power(C, k, iters), 1):
         cum = cum + lam
         out_rows.append((comp, lam, cum / trace))
-        Ck = Ck - lam * np.outer(v, v)
     spark = df.sparkSession
     return spark.createDataFrame(
         out_rows, "component bigint, eigenvalue double, cum_explained double"
@@ -2905,28 +2893,16 @@ def _abtt_directions(
     df: DataFrame, vec: str = "embedding", d: int = ABTT_D,
     iters: int = POWER_ITERS,
 ):
-    """Shared ABTT front half: centered top-`d` principal directions via
-    deflated power iteration on the collected dim x dim covariance (built
-    by the Gram-partial mapInPandas kernel _cov_ddof1 — one pass, no
-    n·dim² exploded self-join; VERDICT r08). Returns the exploded
-    (vec_id, i, x) table and the broadcastable (i, m, v1..vd) projection
-    table consumed by abtt_postprocess / abtt_recall."""
-    import numpy as np
-
+    """Shared ABTT front half: centered top-`d` principal directions by
+    _deflated_power on the collected dim x dim covariance (built in one
+    pass by the Gram-partial mapInPandas kernel _cov_ddof1). Returns the
+    exploded (vec_id, i, x) table and the broadcastable (i, m, v1..vd)
+    projection table consumed by abtt_postprocess / abtt_recall."""
     e = df.select("vec_id", F.posexplode(F.col(vec).cast("array<double>")).alias("i", "x"))
     n, mu, C = _cov_ddof1(df, vec)
     ms = {i: float(mu[i]) for i in range(len(mu))}
     dim = len(ms)
-    vs = []
-    Ck = C
-    for _ in range(d):
-        v = np.full(dim, 1.0 / np.sqrt(dim))
-        for _ in range(iters):
-            w = Ck @ v
-            v = w / np.sqrt((w * w).sum())
-        lam = float(v @ (Ck @ v))
-        vs.append(v)
-        Ck = Ck - lam * np.outer(v, v)
+    vs = [v for _, v in _deflated_power(C, d, iters)]
     spark = df.sparkSession
     proj = spark.createDataFrame(
         [
